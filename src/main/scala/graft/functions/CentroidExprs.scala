@@ -246,7 +246,8 @@ case class CentroidNearestL2(child: Expression, centroids: Array[Array[Double]])
 /** Nearest centroid under EXACT scaled-integer L2 (s28's gated census
   * assignment) — the native form of the SQL limb fold it replaces (r14
   * opt): per centroid, each squared diff `t = (a−b)²` (≤ 4e18 under the
-  * |coordinate| < 10 ⇒ |scaled| ≤ 2e9 bound) splits into base-1e9 limb
+  * |coordinate| < 10 ⇒ |scaled| ≤ 1e9 bound; inputs or centroids past it
+  * would wrap int64, so they fail loudly) splits into base-1e9 limb
   * sums `h += t div 1e9, l += t % 1e9` (t ≥ 0, so div/% agree with
   * Scala's `/`/`%`), carry-normalizes to (dh = h + l div 1e9,
   * dl = l % 1e9), and the argmin compares (dh, dl) lexicographically
@@ -262,6 +263,13 @@ case class CentroidNearestLimb(child: Expression, centroids: Array[Array[Long]])
     extends UnaryExpression {
   override def dataType: DataType = LongType
   override def prettyName: String = "centroid_nearest_limb"
+
+  // a plain throw, not `require`: this runs per input element, and the
+  // by-name message of `require` would allocate a closure on every call
+  private def checkScaled(v: Long, what: String): Unit =
+    if (v < -1000000000L || v > 1000000000L) throw new IllegalArgumentException(
+      s"$prettyName: $what $v is outside |scaled| <= 1e9; its squared diffs would wrap int64")
+  centroids.foreach(_.foreach(checkScaled(_, "centroid coordinate")))
 
   private def mayHaveNullElems: Boolean = child.dataType match {
     case ArrayType(_, n) => n
@@ -283,6 +291,7 @@ case class CentroidNearestLimb(child: Expression, centroids: Array[Array[Long]])
     while (i < n) {
       if (nullable && arr.isNullAt(i)) return null
       x(i) = arr.getLong(i)
+      checkScaled(x(i), "input coordinate")
       i += 1
     }
     require(centroids.length > 0 && n == centroids(0).length,

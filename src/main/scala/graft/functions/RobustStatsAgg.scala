@@ -86,7 +86,11 @@ case class RobustStatsAgg(
   }
 
   override def serialize(buf: RobustStatsAgg.Buf): Array[Byte] = {
-    val bb = ByteBuffer.allocate(12 + buf.size * 8)
+    val bytes = 12L + buf.size * 8L
+    require(bytes <= Int.MaxValue - 8, s"robust_stats: a group of ${buf.size} non-null " +
+      s"values serializes to $bytes bytes, past the 2 GB array limit; " +
+      "large groups take q26's mergeable sketch")
+    val bb = ByteBuffer.allocate(bytes.toInt)
     bb.putInt(buf.size).putLong(buf.nulls)
     var i = 0
     while (i < buf.size) { bb.putDouble(buf.values(i)); i += 1 }

@@ -693,11 +693,12 @@ object Relational {
     * with the contamination they're meant to find): per group, the
     * median, the median absolute deviation, and the count of modified
     * z-score outliers (|x−med|·0.6745/MAD > 3.5, the Iglewicz–Hoaglin
-    * rule). Three passes — median fit, MAD fit, outlier count — each a
-    * grouped aggregation with the tiny fit relations broadcast back; the
-    * exact order statistics sort per group (fine for a screening job;
-    * q26's mergeable sketch is the single-pass path at 100 TB, and this
-    * query is the EXACT reference it is validated against). */
+    * rule). One buffered aggregate ([[graft.functions.RobustStatsAgg]])
+    * holds each WHOLE group's non-null values (8 bytes each, one group
+    * serializing under 2 GB) and sorts them for the exact order
+    * statistics — fine for a screening job over a few groups; q26's
+    * mergeable sketch is the path for large groups and 100 TB, and this
+    * query is the EXACT reference it is validated against. */
   def q40_mad_outliers(spark: SparkSession, dir: String): DataFrame = {
     // r14 opt (guide §1.2): the r13 form ran THREE corpus passes — a
     // percentile(x) fit collected to the driver, a percentile(|x−med|)

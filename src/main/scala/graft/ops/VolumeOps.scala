@@ -99,9 +99,11 @@ object VolumeOps {
       chunkSize = chunkSize, encoding = encoding.getOrElse(vol.ctx.encoding))))
     val dest = Volume.create(vol.spark, destRoot, meta2, 1, vol.fillMissing)
     val sc = vol.ctx; val dc = dest.ctx
-    val hconf = vol.spark.sessionState.newHadoopConf()
-    val sconf = new ChunkStore.SerializableConf(ChunkStore.storeConf(hconf, sc.root, sc.codec.name))
-    val dconf = new ChunkStore.SerializableConf(ChunkStore.storeConf(hconf, dc.root, dc.codec.name))
+    val (sconf, dconf) = (sc.hadoopConf(vol.spark), dc.hadoopConf(vol.spark))
+    // a source chunk absent AND wholly outside `box` reads as zeros even
+    // from a strict source: a fill_missing reader of the SOURCE would see
+    // zeros there too, so they are faithful, not fabricated
+    val scOutside = sc.copy(fillMissing = true)
     val written = dest.chunkTasks(box).as(Encoders.product[(Int, Int, Int)])
       .mapPartitions({ it =>
         val sfs = ChunkStore.fs(sc.root, sconf.conf)
@@ -122,17 +124,8 @@ object VolumeOps {
             val src = Grid.idRanges(tgt, sc.chunkSize, sc.voxelOffset)
             for (sz <- src.loz to src.hiz; sy <- src.loy to src.hiy; sx <- src.lox to src.hix)
               sc.sliceAt(sx, sy, sz, tgt).foreach { ss =>
-                // fetchChunk, not readOpt-by-key: on sharded stores the key
-                // is logical and bytes live behind the shard index
-                sc.fetchChunk(sfs, ss) match {
-                  case Some(blob) => out.blit(sc.decodeChunk(ss, blob), ss.cutoutBox)
-                  case None if sc.fillMissing => () // stays zero
-                  // absent in the source AND entirely outside the requested
-                  // box: a fill_missing reader of the SOURCE would see zeros
-                  // here too, so zeros are faithful, not fabricated
-                  case None if ss.cutoutBox.intersect(box).isEmpty => ()
-                  case None => throw new ChunkStore.MissingChunkException(sc.keyOf(ss))
-                }
+                val reader = if (ss.cutoutBox.intersect(box).isEmpty) scOutside else sc
+                reader.readChunk(sfs, ss).foreach(out.blit(_, ss.cutoutBox))
               }
             ChunkStore.write(dfs, dc.root, dc.keyOf(ds), dc.encodeChunk(out))
             1L

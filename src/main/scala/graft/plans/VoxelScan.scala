@@ -10,11 +10,10 @@ import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.types.Decimal
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.Grid
 import graft.core.Grid.{Box, Ival}
-import graft.volume.{ChunkStore, VolumeCtx, Volume, VoxelBuffer}
+import graft.volume.{ChunkStore, VolumeCtx, VoxelBuffer}
 
 /** The voxel view as a first-class Catalyst citizen.
   *
@@ -131,31 +130,14 @@ object VoxelScanStrategy extends SparkStrategy {
   * written straight into `OnHeapColumnVector`s, 4096 per batch, and Spark
   * plants its codegen'd `ColumnarToRow` above — the same shape as the
   * vectorized parquet reader, which keeps the per-voxel cost to a few
-  * primitive array stores instead of per-row UnsafeRow bookkeeping. The
-  * row-at-a-time path is retained (`doExecute`) for plan shapes where the
-  * planner declines columnar. */
+  * primitive array stores instead of per-row UnsafeRow bookkeeping. There
+  * is no row path: Spark 4.1 always plans `ColumnarToRow` above a node
+  * that declares `supportsColumnar`, so `doExecute` only throws. */
 final case class VoxelScanExec(ctx: VolumeCtx, box: Box, output: Seq[Attribute])
     extends LeafExecNode {
 
   override def simpleString(maxFields: Int): String =
     s"VoxelScanExec ${ctx.root} box=[${box.x.lo}..${box.x.hi}, ${box.y.lo}..${box.y.hi}, ${box.z.lo}..${box.z.hi}]"
-
-  /** Column layout resolved once — tags: 0=x 1=y 2=z 3=c 4=value; dtypeTag
-    * indexes the widened value type (see VolumeCtx widening). */
-  private def tagsOf(output: Seq[Attribute]): Array[Int] =
-    output.map(_.name match {
-      case "x" => 0; case "y" => 1; case "z" => 2; case "c" => 3; case "value" => 4
-    }).toArray
-
-  private def dtypeTagOf(c: VolumeCtx): Int = c.dataType match {
-    case graft.core.Meta.TBool => 0
-    case graft.core.Meta.TUInt8 => 1
-    case graft.core.Meta.TUInt16 => 2
-    case graft.core.Meta.TUInt32 => 3
-    case graft.core.Meta.TUInt64 => 4
-    case graft.core.Meta.TFloat32 => 5
-    case graft.core.Meta.TFloat64 => 6
-  }
 
   override def supportsColumnar: Boolean = true
 
@@ -177,13 +159,31 @@ final case class VoxelScanExec(ctx: VolumeCtx, box: Box, output: Seq[Attribute])
     import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
     val c = ctx
     val query = box
-    val conf = new ChunkStore.SerializableConf(session.sessionState.newHadoopConf())
+    val conf = c.hadoopConf(session)
     val ids = Grid.idRanges(query, c.chunkSize, c.voxelOffset)
+    // a contradictory filter set can narrow the box to negative-length
+    // intervals whose span product is positive garbage — emptiness must be
+    // decided on the box, not the id count
     val total = if (query.isEmpty) 0L else ids.total
     val parts = math.max(1, math.min(total, session.sparkContext.defaultParallelism * 2L)).toInt
-    val tags = tagsOf(output)
-    val dtypeTag = dtypeTagOf(c)
+    // pruned-column layout resolved once to integer tags (0=x 1=y 2=z 3=c
+    // 4=value) and the widened value type to dtypeTag (see
+    // Volume.widenedType): no string match or boxing per voxel
+    val tags = output.map(_.name match {
+      case "x" => 0; case "y" => 1; case "z" => 2; case "c" => 3; case "value" => 4
+    }).toArray
+    val dtypeTag = c.dataType match {
+      case graft.core.Meta.TBool => 0
+      case graft.core.Meta.TUInt8 => 1
+      case graft.core.Meta.TUInt16 => 2
+      case graft.core.Meta.TUInt32 => 3
+      case graft.core.Meta.TUInt64 => 4
+      case graft.core.Meta.TFloat32 => 5
+      case graft.core.Meta.TFloat64 => 6
+    }
     val needValue = tags.contains(4)
+    // coords-only scans under zero-fill semantics never touch the store;
+    // strict mode keeps fetching so missing chunks still raise
     val skipFetch = !needValue && c.fillMissing
     val schema = org.apache.spark.sql.types.StructType(
       output.map(a => org.apache.spark.sql.types.StructField(a.name, a.dataType, a.nullable)))
@@ -198,13 +198,8 @@ final case class VoxelScanExec(ctx: VolumeCtx, box: Box, output: Seq[Attribute])
         c.sliceAt(cx, cy, cz, query).map { s =>
           val buf =
             if (skipFetch) null
-            else c.fetchChunk(fs, s) match {
-              case Some(blob) =>
-                mChunks.add(1); mBytes.add(blob.length)
-                c.decodeChunk(s, blob)
-              case None if c.fillMissing => mMissing.add(1); null
-              case None => throw new ChunkStore.MissingChunkException(c.keyOf(s))
-            }
+            else c.readChunk(fs, s, n => { mChunks.add(1); mBytes.add(n) })
+              .getOrElse { mMissing.add(1); null }
           (s, buf)
         }
       }
@@ -213,7 +208,7 @@ final case class VoxelScanExec(ctx: VolumeCtx, box: Box, output: Seq[Attribute])
         private val vectors = OnHeapColumnVector.allocateColumns(capacity, schema)
         private val batch = new ColumnarBatch(vectors.map(v => v: ColumnVector))
         // cursor over the current slice's cutout box, (ch, z, y, x) order —
-        // identical emission order to the row path
+        // the emission order of Volume.toVoxels
         private var cur: Grid.ChunkSlice = null
         private var buf: VoxelBuffer = null
         private var ch = 0; private var z = 0; private var y = 0; private var x = 0
@@ -296,103 +291,10 @@ final case class VoxelScanExec(ctx: VolumeCtx, box: Box, output: Seq[Attribute])
     }
   }
 
-  override protected def doExecute(): RDD[InternalRow] = {
-    val c = ctx
-    val query = box
-    val conf = new ChunkStore.SerializableConf(session.sessionState.newHadoopConf())
-    val ids = Grid.idRanges(query, c.chunkSize, c.voxelOffset)
-    // a contradictory filter set can narrow the box to negative-length
-    // intervals whose span product is positive garbage — emptiness must be
-    // decided on the box, not the id count
-    val total = if (query.isEmpty) 0L else ids.total
-    val parts = math.max(1, math.min(total, session.sparkContext.defaultParallelism * 2L)).toInt
-    // pruned-column layout, resolved ONCE to integer tags: this loop runs
-    // per voxel, so no string comparison / boxing / row allocation inside
-    // (tags: 0=x 1=y 2=z 3=c 4=value; dtypeTag indexes the widened type)
-    val tags: Array[Int] = tagsOf(output)
-    val dtypeTag: Int = dtypeTagOf(c)
-    val needValue = tags.contains(4)
-    // coords-only scans under zero-fill semantics never touch the store:
-    // rows exist for every in-box voxel regardless of which chunks exist.
-    // Strict mode (fillMissing=false) keeps fetching so missing chunks still
-    // raise, preserving error semantics.
-    val skipFetch = !needValue && c.fillMissing
-    val (mRows, mChunks, mMissing, mBytes) =
-      (longMetric("numOutputRows"), longMetric("chunksFetched"),
-        longMetric("chunksMissing"), longMetric("bytesFetched"))
-    session.sparkContext.range(0L, total, 1, parts).mapPartitions { linearIds =>
-      val fs = ChunkStore.fs(c.root, conf.conf)
-      // one UnsafeRow buffer per partition, rewritten in place per voxel —
-      // standard scan-node row reuse (consumers copy when they buffer)
-      val writer = new org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter(tags.length)
-      writer.resetRowWriter()
-      linearIds.flatMap { id =>
-        val (cx, cy, cz) = ids.coords(id)
-        c.sliceAt(cx, cy, cz, query).iterator.flatMap { s =>
-          val bufOpt =
-            if (skipFetch) None
-            else c.fetchChunk(fs, s) match {
-              case Some(blob) =>
-                mChunks.add(1); mBytes.add(blob.length)
-                Some(c.decodeChunk(s, blob))
-              case None if c.fillMissing => mMissing.add(1); None
-              case None => throw new ChunkStore.MissingChunkException(c.keyOf(s))
-            }
-          val buf = bufOpt.orNull
-          val cut = s.cutoutBox
-          for {
-            ch <- (0 until c.numChannels).iterator
-            z <- (cut.z.lo to cut.z.hi).iterator
-            y <- (cut.y.lo to cut.y.hi).iterator
-            x <- (cut.x.lo to cut.x.hi).iterator
-          } yield {
-            writer.reset()
-            var i = 0
-            while (i < tags.length) {
-              tags(i) match {
-                case 0 => writer.write(i, x)
-                case 1 => writer.write(i, y)
-                case 2 => writer.write(i, z)
-                case 3 => writer.write(i, ch)
-                case _ =>
-                  if (buf == null) dtypeTag match {
-                    case 0 => writer.write(i, false)
-                    case 1 => writer.write(i, 0.toShort)
-                    case 2 => writer.write(i, 0)
-                    case 3 => writer.write(i, 0L)
-                    case 4 => writer.write(i, Decimal(0L), 20, 0)
-                    case 5 => writer.write(i, 0.0f)
-                    case _ => writer.write(i, 0.0)
-                  } else {
-                    val lx = x - buf.origin._1; val ly = y - buf.origin._2; val lz = z - buf.origin._3
-                    dtypeTag match {
-                      case 0 => writer.write(i, buf.getLong(lx, ly, lz, ch) != 0L)
-                      case 1 => writer.write(i, buf.getLong(lx, ly, lz, ch).toShort)
-                      case 2 => writer.write(i, buf.getLong(lx, ly, lz, ch).toInt)
-                      case 3 => writer.write(i, buf.getLong(lx, ly, lz, ch))
-                      case 4 =>
-                        val u = buf.getLong(lx, ly, lz, ch)
-                        writer.write(i,
-                          if (u >= 0) Decimal(u)
-                          else Decimal(new java.math.BigDecimal(new java.math.BigInteger(
-                            java.lang.Long.toUnsignedString(u)))), 20, 0)
-                      case 5 => writer.write(i, buf.getDouble(lx, ly, lz, ch).toFloat)
-                      case _ => writer.write(i, buf.getDouble(lx, ly, lz, ch))
-                    }
-                  }
-              }
-              i += 1
-            }
-            // per-emitted-row accounting (a plain local long add), so a
-            // partially drained iterator (e.g. LIMIT) reports true counts
-            // consistent with the columnar path's per-batch accounting
-            mRows.add(1)
-            writer.getRow: InternalRow
-          }
-        }
-      }
-    }
-  }
+  /** Columnar only: `supportsColumnar` makes Spark plant `ColumnarToRow`
+    * above this node, so the row path is never planned. */
+  override protected def doExecute(): RDD[InternalRow] =
+    throw new IllegalStateException(s"$nodeName is columnar-only; execute via executeColumnar")
 }
 
 /** Session extension registrar:

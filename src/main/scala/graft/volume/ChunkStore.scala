@@ -36,6 +36,13 @@ object ChunkStore {
     }
   }
 
+  /** A store FileSystem opened on first use in each task: a task
+    * deserializes its own copy of the closure holding this, so a chunk loop
+    * opens it once per partition, not once per chunk. */
+  final class TaskFs(root: String, conf: SerializableConf) extends Serializable {
+    @transient lazy val get: FileSystem = fs(root, conf.conf)
+  }
+
   /** Per-scheme cloud configuration for a store at `root` holding chunks in
     * `encoding` — the engine's analog of the reference's per-backend PUT
     * headers (reference: src/backends/S3Dicts.jl:57-77, GSDicts.jl:54-68).

@@ -1,6 +1,6 @@
 package graft.volume
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -294,6 +294,24 @@ final case class VolumeCtx(
       (b.x.lo, b.y.lo, b.z.lo), raw)
   }
 
+  /** Fetch + decode one chunk — the read every array operator shares, and
+    * the ONE place that decides what an absent chunk means: `None` under
+    * fillMissing (it reads as zeros, reference: src/modes/sequential.jl:52-54),
+    * [[ChunkStore.MissingChunkException]] otherwise. `fetched` sees the
+    * stored blob's size when the chunk exists (scan I/O metrics). */
+  def readChunk(fs: org.apache.hadoop.fs.FileSystem, slice: ChunkSlice,
+      fetched: Int => Unit = _ => ()): Option[VoxelBuffer] =
+    fetchChunk(fs, slice) match {
+      case Some(blob) => fetched(blob.length); Some(decodeChunk(slice, blob))
+      case None if fillMissing => None
+      case None => throw new ChunkStore.MissingChunkException(keyOf(slice))
+    }
+
+  /** The Hadoop conf every task on this store opens its FileSystem with. */
+  def hadoopConf(spark: SparkSession): ChunkStore.SerializableConf =
+    new ChunkStore.SerializableConf(
+      ChunkStore.storeConf(spark.sessionState.newHadoopConf(), root, codec.name))
+
   def encodeChunk(buf: VoxelBuffer): Array[Byte] = keyStyle match {
     case "mrc-z" => throw new UnsupportedOperationException(
       "mrc: read-only through the chunk engine (a dense single-file container " +
@@ -367,9 +385,6 @@ final class Volume(
     scaleMeta.voxelOffset, scaleMeta.volumeBox, meta.dataType, meta.numChannels,
     scaleMeta.encoding, fillMissing, keyStyle, padEdgeChunks, shard, mrc)
 
-  private def hconf = new ChunkStore.SerializableConf(
-    ChunkStore.storeConf(spark.sessionState.newHadoopConf(), root, ctx.codec.name))
-
   /** Number of chunks a box touches — counts grid cells in the bounding id
     * box, like the reference (src/type.jl:285-292). Pure math, no I/O. */
   def numChunks(query: Box): Long =
@@ -394,30 +409,32 @@ final class Volume(
       expr(s"cast(${ids.loz}L + (id div ${ids.nx * ids.ny}L) as int)").as("cz"))
   }
 
-  /** Fetch + decode + clip the chunks of `query`; returns pieces anchored at
-    * global coords. The per-partition loop opens one FileSystem and streams
-    * chunks through fetch→decode→clip, the executor-side analog of the
-    * reference's worker pipeline (src/modes/multithreads.jl:66-123). */
-  private def cutPieces(query: Box): Dataset[CutPiece] = {
-    val c = ctx; val conf = hconf
-    implicit val enc = Encoders.product[CutPiece]
-    chunkTasks(query).as(Encoders.product[(Int, Int, Int)]).mapPartitions { it =>
+  /** The chunk-task loop behind every read operator: per partition one
+    * FileSystem; per task (default: the `query` grid) the volume-clamped
+    * slice, read through [[VolumeCtx.readChunk]], handed to `kernel` with
+    * its buffer — `None` for an absent chunk under fillMissing. The
+    * executor-side analog of the reference's worker pipeline
+    * (src/modes/multithreads.jl:66-123). Out-of-volume cells never reach
+    * the kernel. */
+  private def mapChunks[T](query: Box, tasks: Option[DataFrame] = None)(
+      kernel: (ChunkSlice, Option[VoxelBuffer]) => IterableOnce[T])(
+      implicit enc: Encoder[T]): Dataset[T] = {
+    val c = ctx; val conf = c.hadoopConf(spark)
+    tasks.getOrElse(chunkTasks(query)).as(Encoders.product[(Int, Int, Int)]).mapPartitions { it =>
       val fs = ChunkStore.fs(c.root, conf.conf)
       it.flatMap { case (cx, cy, cz) =>
-        c.sliceAt(cx, cy, cz, query).flatMap { s =>
-          c.fetchChunk(fs, s) match {
-            case Some(blob) =>
-              val chunk = c.decodeChunk(s, blob)
-              val piece = chunk.slice(s.cutoutBox)
-              Some(CutPiece(piece.origin._1, piece.origin._2, piece.origin._3,
-                piece.sx, piece.sy, piece.sz, piece.bytes))
-            case None if c.fillMissing => None // zeros (sequential.jl:52-54)
-            case None => throw new ChunkStore.MissingChunkException(c.keyOf(s))
-          }
-        }
+        c.sliceAt(cx, cy, cz, query).iterator.flatMap(s => kernel(s, c.readChunk(fs, s)))
       }
     }
   }
+
+  /** The present chunks of `query`, each clipped to its cutout box and
+    * anchored at global coords; absent chunks (fillMissing) yield no piece. */
+  private def cutPieces(query: Box): Dataset[CutPiece] =
+    mapChunks(query) { (s, chunk) =>
+      chunk.map(_.slice(s.cutoutBox)).map(p =>
+        CutPiece(p.origin._1, p.origin._2, p.origin._3, p.sx, p.sy, p.sz, p.bytes))
+    }(Encoders.product[CutPiece])
 
   /** N-d range read: the reference's `ba[x0:x1, y0:y1, z0:z1]`
     * (reference: src/type.jl:212-223). Returns a zero-initialized buffer
@@ -452,42 +469,28 @@ final class Volume(
 
   /** The distributed long-form view of a box: one row per voxel
     * `(x, y, z, c, value)` in global coordinates — what joins/aggregations
-    * and the whole relational surface run on. Missing chunks yield zeros,
-    * preserving the reference's fill semantics (src/modes/sequential.jl:52-54). */
+    * and the whole relational surface run on. A [[mapChunks]] kernel that
+    * streams each chunk's rows lazily, channel-major then z, y, x; absent
+    * chunks yield zeros under fillMissing (src/modes/sequential.jl:52-54). */
   def toVoxels(query: Box): DataFrame = {
-    val c = ctx; val conf = hconf
-    val schema = voxelSchema
-    val rowEnc = Encoders.row(schema)
-    val taskEnc = Encoders.product[(Int, Int, Int)]
-    val rows = chunkTasks(query).as(taskEnc).mapPartitions({ it =>
-      val fs = ChunkStore.fs(c.root, conf.conf)
-      it.flatMap { case (cx, cy, cz) =>
-        c.sliceAt(cx, cy, cz, query).toSeq.flatMap { s =>
-          val bufOpt = c.fetchChunk(fs, s) match {
-            case Some(blob) => Some(c.decodeChunk(s, blob))
-            case None if c.fillMissing => None
-            case None => throw new ChunkStore.MissingChunkException(c.keyOf(s))
-          }
-          val cut = s.cutoutBox
-          // iterator generators: never materialize a chunk's rows strictly
-          for {
-            ch <- (0 until c.numChannels).iterator
-            z <- (cut.z.lo to cut.z.hi).iterator
-            y <- (cut.y.lo to cut.y.hi).iterator
-            x <- (cut.x.lo to cut.x.hi).iterator
-          } yield {
-            val v: Any = bufOpt match {
-              case Some(b) =>
-                val (lx, ly, lz) = (x - b.origin._1, y - b.origin._2, z - b.origin._3)
-                Volume.widenedValue(c.dataType, b, lx, ly, lz, ch)
-              case None => Volume.zeroValue(c.dataType)
-            }
-            Row(x, y, z, ch, v)
-          }
+    val c = ctx
+    mapChunks(query) { (s, bufOpt) =>
+      val cut = s.cutoutBox
+      for {
+        ch <- (0 until c.numChannels).iterator
+        z <- (cut.z.lo to cut.z.hi).iterator
+        y <- (cut.y.lo to cut.y.hi).iterator
+        x <- (cut.x.lo to cut.x.hi).iterator
+      } yield {
+        val v: Any = bufOpt match {
+          case Some(b) =>
+            val (lx, ly, lz) = (x - b.origin._1, y - b.origin._2, z - b.origin._3)
+            Volume.widenedValue(c.dataType, b, lx, ly, lz, ch)
+          case None => Volume.zeroValue(c.dataType)
         }
+        Row(x, y, z, ch, v)
       }
-    })(rowEnc)
-    rows
+    }(Encoders.row(voxelSchema))
   }
 
   /** Chunk-ALIGNED zip of two volumes over `query`: one row per voxel
@@ -502,52 +505,38 @@ final class Volume(
     * This is the operator behind overlay analytics (segmentation ×
     * intensity, mask × image). Single-channel volumes; a missing chunk on
     * either side fills zeros under that volume's fillMissing, mirroring
-    * [[toVoxels]]. */
+    * [[toVoxels]]: this volume's chunk comes through [[mapChunks]], the
+    * other's through its own [[VolumeCtx.readChunk]]. */
   def zipVoxels(other: Volume, query: Box): DataFrame = {
     val c = ctx; val c2 = other.ctx
     require(c.chunkSize == c2.chunkSize && c.voxelOffset == c2.voxelOffset,
       s"zipVoxels needs one chunk grid: ${c.chunkSize}@${c.voxelOffset} vs ${c2.chunkSize}@${c2.voxelOffset}")
     require(c.numChannels == 1 && c2.numChannels == 1, "zipVoxels: single-channel volumes only")
-    val (conf, conf2) = (hconf, other.hconf)
+    val fs2 = new ChunkStore.TaskFs(c2.root, c2.hadoopConf(spark))
     val schema = StructType(Seq(
       StructField("x", IntegerType, nullable = false),
       StructField("y", IntegerType, nullable = false),
       StructField("z", IntegerType, nullable = false),
       StructField("va", Volume.widenedType(meta.dataType), nullable = false),
       StructField("vb", Volume.widenedType(other.meta.dataType), nullable = false)))
-    val rowEnc = Encoders.row(schema)
-    val taskEnc = Encoders.product[(Int, Int, Int)]
-    chunkTasks(query).as(taskEnc).mapPartitions({ it =>
-      val fs = ChunkStore.fs(c.root, conf.conf)
-      val fs2 = ChunkStore.fs(c2.root, conf2.conf)
-      def decodeOrNone(cc: VolumeCtx, f: org.apache.hadoop.fs.FileSystem, s: ChunkSlice) =
-        cc.fetchChunk(f, s) match {
-          case Some(blob) => Some(cc.decodeChunk(s, blob))
-          case None if cc.fillMissing => None
-          case None => throw new ChunkStore.MissingChunkException(cc.keyOf(s))
-        }
-      it.flatMap { case (cx, cy, cz) =>
-        (c.sliceAt(cx, cy, cz, query), c2.sliceAt(cx, cy, cz, query)) match {
-          case (Some(s), Some(s2)) =>
-            val bufA = decodeOrNone(c, fs, s)
-            val bufB = decodeOrNone(c2, fs2, s2)
-            val cut = s.cutoutBox // ≡ s2.cutoutBox: same grid, same query
-            for {
-              z <- (cut.z.lo to cut.z.hi).iterator
-              y <- (cut.y.lo to cut.y.hi).iterator
-              x <- (cut.x.lo to cut.x.hi).iterator
-            } yield {
-              def at(cc: VolumeCtx, b: Option[VoxelBuffer]): Any = b match {
-                case Some(bb) => Volume.widenedValue(cc.dataType, bb,
-                  x - bb.origin._1, y - bb.origin._2, z - bb.origin._3, 0)
-                case None => Volume.zeroValue(cc.dataType)
-              }
-              Row(x, y, z, at(c, bufA), at(c2, bufB))
-            }
-          case _ => Iterator.empty
+    mapChunks(query) { (s, bufA) =>
+      c2.sliceAt(s.idx, s.idy, s.idz, query).iterator.flatMap { s2 =>
+        val bufB = c2.readChunk(fs2.get, s2)
+        val cut = s.cutoutBox // ≡ s2.cutoutBox: same grid, same query
+        for {
+          z <- (cut.z.lo to cut.z.hi).iterator
+          y <- (cut.y.lo to cut.y.hi).iterator
+          x <- (cut.x.lo to cut.x.hi).iterator
+        } yield {
+          def at(cc: VolumeCtx, b: Option[VoxelBuffer]): Any = b match {
+            case Some(bb) => Volume.widenedValue(cc.dataType, bb,
+              x - bb.origin._1, y - bb.origin._2, z - bb.origin._3, 0)
+            case None => Volume.zeroValue(cc.dataType)
+          }
+          Row(x, y, z, at(c, bufA), at(c2, bufB))
         }
       }
-    })(rowEnc)
+    }(Encoders.row(schema))
   }
 
   /** Per-chunk connected components (6-connectivity, foreground = nonzero):
@@ -572,7 +561,7 @@ final class Volume(
     * reference: src/ChunkIterators.jl). A missing chunk under fillMissing
     * is all-background and emits nothing. */
   def localComponents(query: Box): DataFrame = {
-    val c = ctx; val conf = hconf
+    val c = ctx
     require(c.numChannels == 1, "localComponents: single-channel volumes only")
     require(query.x.lo >= 0 && query.x.hi < (1 << 20) &&
       query.y.lo >= 0 && query.y.hi < (1 << 20) &&
@@ -592,102 +581,84 @@ final class Volume(
         StructField("y", IntegerType, nullable = false),
         StructField("z", IntegerType, nullable = false))), containsNull = false),
         nullable = false)))
-    val rowEnc = Encoders.row(schema)
-    val taskEnc = Encoders.product[(Int, Int, Int)]
-    val isFloat = c.dataType == graft.core.Meta.TFloat32 || c.dataType == graft.core.Meta.TFloat64
-    chunkTasks(query).as(taskEnc).mapPartitions({ it =>
-      val fs = ChunkStore.fs(c.root, conf.conf)
-      it.flatMap { case (cx, cy, cz) =>
-        c.sliceAt(cx, cy, cz, query).iterator.flatMap { s =>
-          c.fetchChunk(fs, s) match {
-            case None if c.fillMissing => Iterator.empty // all-zero: no foreground
-            case None => throw new ChunkStore.MissingChunkException(c.keyOf(s))
-            case Some(blob) =>
-              val b = c.decodeChunk(s, blob)
-              val cut = s.cutoutBox
-              val nx = cut.x.len; val ny = cut.y.len; val nz = cut.z.len
-              // union-find over the cut box; -1 = background
-              val parent = new Array[Int](nx * ny * nz)
-              java.util.Arrays.fill(parent, -1)
-              @inline def li(lx: Int, ly: Int, lz: Int): Int = (lz * ny + ly) * nx + lx
-              def find(i0: Int): Int = {
-                var i = i0
-                while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
-                i
-              }
-              @inline def isFg(lx: Int, ly: Int, lz: Int): Boolean = {
-                val bx = cut.x.lo - b.origin._1 + lx
-                val by = cut.y.lo - b.origin._2 + ly
-                val bz = cut.z.lo - b.origin._3 + lz
-                if (isFloat) b.getDouble(bx, by, bz, 0) != 0.0
-                else b.getLong(bx, by, bz, 0) != 0L
-              }
-              // pass 1: mark foreground, union each voxel with its already-
-              // visited -x/-y/-z neighbors (x-fastest scan order)
-              var lz = 0
-              while (lz < nz) {
-                var ly = 0
-                while (ly < ny) {
-                  var lx = 0
-                  while (lx < nx) {
-                    if (isFg(lx, ly, lz)) {
-                      val i = li(lx, ly, lz)
-                      parent(i) = i
-                      @inline def union(j: Int): Unit = {
-                        val ri = find(i); val rj = find(j)
-                        if (ri != rj) parent(math.max(ri, rj)) = math.min(ri, rj)
-                      }
-                      if (lx > 0 && parent(li(lx - 1, ly, lz)) >= 0) union(li(lx - 1, ly, lz))
-                      if (ly > 0 && parent(li(lx, ly - 1, lz)) >= 0) union(li(lx, ly - 1, lz))
-                      if (lz > 0 && parent(li(lx, ly, lz - 1)) >= 0) union(li(lx, ly, lz - 1))
-                    }
-                    lx += 1
-                  }
-                  ly += 1
+    mapChunks(query) { (s, chunk) =>
+      chunk.iterator.flatMap { b => // an absent chunk is all background: no rows
+        val cut = s.cutoutBox
+        val nx = cut.x.len; val ny = cut.y.len; val nz = cut.z.len
+        // union-find over the cut box; -1 = background
+        val parent = new Array[Int](nx * ny * nz)
+        java.util.Arrays.fill(parent, -1)
+        @inline def li(lx: Int, ly: Int, lz: Int): Int = (lz * ny + ly) * nx + lx
+        def find(i0: Int): Int = {
+          var i = i0
+          while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
+          i
+        }
+        val (fg, _) = Volume.foreground(b, cut)
+        // pass 1: mark foreground, union each voxel with its already-
+        // visited -x/-y/-z neighbors (x-fastest scan order)
+        var lz = 0
+        while (lz < nz) {
+          var ly = 0
+          while (ly < ny) {
+            var lx = 0
+            while (lx < nx) {
+              if (fg(li(lx, ly, lz))) {
+                val i = li(lx, ly, lz)
+                parent(i) = i
+                @inline def union(j: Int): Unit = {
+                  val ri = find(i); val rj = find(j)
+                  if (ri != rj) parent(math.max(ri, rj)) = math.min(ri, rj)
                 }
-                lz += 1
+                if (lx > 0 && parent(li(lx - 1, ly, lz)) >= 0) union(li(lx - 1, ly, lz))
+                if (ly > 0 && parent(li(lx, ly - 1, lz)) >= 0) union(li(lx, ly - 1, lz))
+                if (lz > 0 && parent(li(lx, ly, lz - 1)) >= 0) union(li(lx, ly, lz - 1))
               }
-              // pass 2: fold per-root stats + face voxel lists
-              final class Acc {
-                var n = 0L; var minLin = Long.MaxValue
-                var x0 = Int.MaxValue; var x1 = Int.MinValue
-                var y0 = Int.MaxValue; var y1 = Int.MinValue
-                var z0 = Int.MaxValue; var z1 = Int.MinValue
-                val face = scala.collection.mutable.ArrayBuffer.empty[Row]
-              }
-              val accs = scala.collection.mutable.LongMap.empty[Acc]
-              lz = 0
-              while (lz < nz) {
-                var ly = 0
-                while (ly < ny) {
-                  var lx = 0
-                  while (lx < nx) {
-                    val i = li(lx, ly, lz)
-                    if (parent(i) >= 0) {
-                      val gx = cut.x.lo + lx; val gy = cut.y.lo + ly; val gz = cut.z.lo + lz
-                      val lin = (gz.toLong << 40) | (gy.toLong << 20) | gx.toLong
-                      val a = accs.getOrElseUpdate(find(i).toLong, new Acc)
-                      a.n += 1
-                      if (lin < a.minLin) a.minLin = lin
-                      if (gx < a.x0) a.x0 = gx; if (gx > a.x1) a.x1 = gx
-                      if (gy < a.y0) a.y0 = gy; if (gy > a.y1) a.y1 = gy
-                      if (gz < a.z0) a.z0 = gz; if (gz > a.z1) a.z1 = gz
-                      if (lx == 0 || lx == nx - 1 || ly == 0 || ly == ny - 1 ||
-                        lz == 0 || lz == nz - 1) a.face += Row(gx, gy, gz)
-                    }
-                    lx += 1
-                  }
-                  ly += 1
-                }
-                lz += 1
-              }
-              accs.values.iterator.map { a =>
-                Row(a.minLin, a.n, a.x0, a.x1, a.y0, a.y1, a.z0, a.z1, a.face.toSeq)
-              }
+              lx += 1
+            }
+            ly += 1
           }
+          lz += 1
+        }
+        // pass 2: fold per-root stats + face voxel lists
+        final class Acc {
+          var n = 0L; var minLin = Long.MaxValue
+          var x0 = Int.MaxValue; var x1 = Int.MinValue
+          var y0 = Int.MaxValue; var y1 = Int.MinValue
+          var z0 = Int.MaxValue; var z1 = Int.MinValue
+          val face = scala.collection.mutable.ArrayBuffer.empty[Row]
+        }
+        val accs = scala.collection.mutable.LongMap.empty[Acc]
+        lz = 0
+        while (lz < nz) {
+          var ly = 0
+          while (ly < ny) {
+            var lx = 0
+            while (lx < nx) {
+              val i = li(lx, ly, lz)
+              if (parent(i) >= 0) {
+                val gx = cut.x.lo + lx; val gy = cut.y.lo + ly; val gz = cut.z.lo + lz
+                val lin = (gz.toLong << 40) | (gy.toLong << 20) | gx.toLong
+                val a = accs.getOrElseUpdate(find(i).toLong, new Acc)
+                a.n += 1
+                if (lin < a.minLin) a.minLin = lin
+                if (gx < a.x0) a.x0 = gx; if (gx > a.x1) a.x1 = gx
+                if (gy < a.y0) a.y0 = gy; if (gy > a.y1) a.y1 = gy
+                if (gz < a.z0) a.z0 = gz; if (gz > a.z1) a.z1 = gz
+                if (lx == 0 || lx == nx - 1 || ly == 0 || ly == ny - 1 ||
+                  lz == 0 || lz == nz - 1) a.face += Row(gx, gy, gz)
+              }
+              lx += 1
+            }
+            ly += 1
+          }
+          lz += 1
+        }
+        accs.values.iterator.map { a =>
+          Row(a.minLin, a.n, a.x0, a.x1, a.y0, a.y1, a.z0, a.z1, a.face.toSeq)
         }
       }
-    })(rowEnc)
+    }(Encoders.row(schema))
   }
 
   /** Per-chunk binary DILATION partials (6-connectivity, foreground =
@@ -711,7 +682,7 @@ final class Volume(
     * move. Restricting to `query`-interior semantics: dilation does not
     * grow outside the query box. */
   def localDilate(query: Box): DataFrame = {
-    val c = ctx; val conf = hconf
+    val c = ctx
     require(c.numChannels == 1, "localDilate: single-channel volumes only")
     val schema = StructType(Seq(
       StructField("cx", IntegerType, nullable = false),
@@ -732,91 +703,60 @@ final class Volume(
         StructField("y", IntegerType, nullable = false),
         StructField("z", IntegerType, nullable = false))), containsNull = false),
         nullable = false)))
-    val rowEnc = Encoders.row(schema)
-    val taskEnc = Encoders.product[(Int, Int, Int)]
-    val isFloat = c.dataType == graft.core.Meta.TFloat32 || c.dataType == graft.core.Meta.TFloat64
-    val qbox = query
-    chunkTasks(query).as(taskEnc).mapPartitions({ it =>
-      val fs = ChunkStore.fs(c.root, conf.conf)
-      it.flatMap { case (cx, cy, cz) =>
-        c.sliceAt(cx, cy, cz, qbox).iterator.flatMap { s =>
-          c.fetchChunk(fs, s) match {
-            case None if c.fillMissing => Iterator.empty // all-background
-            case None => throw new ChunkStore.MissingChunkException(c.keyOf(s))
-            case Some(blob) =>
-              val b = c.decodeChunk(s, blob)
-              val cut = s.cutoutBox
-              val nx = cut.x.len; val ny = cut.y.len; val nz = cut.z.len
-              @inline def li(lx: Int, ly: Int, lz: Int): Int = (lz * ny + ly) * nx + lx
-              val fg = new Array[Boolean](nx * ny * nz)
-              var nFg = 0L
-              var lz = 0
-              while (lz < nz) {
-                var ly = 0
-                while (ly < ny) {
-                  var lx = 0
-                  while (lx < nx) {
-                    val bx = cut.x.lo - b.origin._1 + lx
-                    val by = cut.y.lo - b.origin._2 + ly
-                    val bz = cut.z.lo - b.origin._3 + lz
-                    val v = if (isFloat) b.getDouble(bx, by, bz, 0) != 0.0
-                      else b.getLong(bx, by, bz, 0) != 0L
-                    if (v) { fg(li(lx, ly, lz)) = true; nFg += 1 }
-                    lx += 1
-                  }
-                  ly += 1
-                }
-                lz += 1
+    mapChunks(query) { (s, chunk) =>
+      chunk.iterator.map { b => // an absent chunk is all background: no row
+        val (cx, cy, cz) = (s.idx, s.idy, s.idz)
+        val cut = s.cutoutBox
+        val nx = cut.x.len; val ny = cut.y.len; val nz = cut.z.len
+        @inline def li(lx: Int, ly: Int, lz: Int): Int = (lz * ny + ly) * nx + lx
+        val (fg, nFg) = Volume.foreground(b, cut)
+        var nDil = 0L
+        val shell = scala.collection.mutable.ArrayBuffer.empty[Row]
+        val spill = scala.collection.mutable.ArrayBuffer.empty[Row]
+        var lz = 0
+        while (lz < nz) {
+          var ly = 0
+          while (ly < ny) {
+            var lx = 0
+            while (lx < nx) {
+              val self = fg(li(lx, ly, lz))
+              val dil = self ||
+                (lx > 0 && fg(li(lx - 1, ly, lz))) ||
+                (lx < nx - 1 && fg(li(lx + 1, ly, lz))) ||
+                (ly > 0 && fg(li(lx, ly - 1, lz))) ||
+                (ly < ny - 1 && fg(li(lx, ly + 1, lz))) ||
+                (lz > 0 && fg(li(lx, ly, lz - 1))) ||
+                (lz < nz - 1 && fg(li(lx, ly, lz + 1)))
+              if (dil) {
+                nDil += 1
+                val gx = cut.x.lo + lx; val gy = cut.y.lo + ly; val gz = cut.z.lo + lz
+                if (lx == 0 || lx == nx - 1 || ly == 0 || ly == ny - 1 ||
+                  lz == 0 || lz == nz - 1) shell += Row(gx, gy, gz)
               }
-              var nDil = 0L
-              val shell = scala.collection.mutable.ArrayBuffer.empty[Row]
-              val spill = scala.collection.mutable.ArrayBuffer.empty[Row]
-              lz = 0
-              while (lz < nz) {
-                var ly = 0
-                while (ly < ny) {
-                  var lx = 0
-                  while (lx < nx) {
-                    val self = fg(li(lx, ly, lz))
-                    val dil = self ||
-                      (lx > 0 && fg(li(lx - 1, ly, lz))) ||
-                      (lx < nx - 1 && fg(li(lx + 1, ly, lz))) ||
-                      (ly > 0 && fg(li(lx, ly - 1, lz))) ||
-                      (ly < ny - 1 && fg(li(lx, ly + 1, lz))) ||
-                      (lz > 0 && fg(li(lx, ly, lz - 1))) ||
-                      (lz < nz - 1 && fg(li(lx, ly, lz + 1)))
-                    if (dil) {
-                      nDil += 1
-                      val gx = cut.x.lo + lx; val gy = cut.y.lo + ly; val gz = cut.z.lo + lz
-                      if (lx == 0 || lx == nx - 1 || ly == 0 || ly == ny - 1 ||
-                        lz == 0 || lz == nz - 1) shell += Row(gx, gy, gz)
-                    }
-                    if (self) {
-                      val gx = cut.x.lo + lx; val gy = cut.y.lo + ly; val gz = cut.z.lo + lz
-                      @inline def push(dcx: Int, dcy: Int, dcz: Int,
-                          tx: Int, ty: Int, tz: Int): Unit = {
-                        if (qbox.x.contains(tx) && qbox.y.contains(ty) && qbox.z.contains(tz))
-                          spill += Row(cx + dcx, cy + dcy, cz + dcz, tx, ty, tz)
-                        ()
-                      }
-                      if (lx == 0) push(-1, 0, 0, gx - 1, gy, gz)
-                      if (lx == nx - 1) push(1, 0, 0, gx + 1, gy, gz)
-                      if (ly == 0) push(0, -1, 0, gx, gy - 1, gz)
-                      if (ly == ny - 1) push(0, 1, 0, gx, gy + 1, gz)
-                      if (lz == 0) push(0, 0, -1, gx, gy, gz - 1)
-                      if (lz == nz - 1) push(0, 0, 1, gx, gy, gz + 1)
-                    }
-                    lx += 1
-                  }
-                  ly += 1
+              if (self) {
+                val gx = cut.x.lo + lx; val gy = cut.y.lo + ly; val gz = cut.z.lo + lz
+                @inline def push(dcx: Int, dcy: Int, dcz: Int,
+                    tx: Int, ty: Int, tz: Int): Unit = {
+                  if (query.x.contains(tx) && query.y.contains(ty) && query.z.contains(tz))
+                    spill += Row(cx + dcx, cy + dcy, cz + dcz, tx, ty, tz)
+                  ()
                 }
-                lz += 1
+                if (lx == 0) push(-1, 0, 0, gx - 1, gy, gz)
+                if (lx == nx - 1) push(1, 0, 0, gx + 1, gy, gz)
+                if (ly == 0) push(0, -1, 0, gx, gy - 1, gz)
+                if (ly == ny - 1) push(0, 1, 0, gx, gy + 1, gz)
+                if (lz == 0) push(0, 0, -1, gx, gy, gz - 1)
+                if (lz == nz - 1) push(0, 0, 1, gx, gy, gz + 1)
               }
-              Iterator.single(Row(cx, cy, cz, nFg, nDil, shell.toSeq, spill.toSeq))
+              lx += 1
+            }
+            ly += 1
           }
+          lz += 1
         }
+        Row(cx, cy, cz, nFg, nDil, shell.toSeq, spill.toSeq)
       }
-    })(rowEnc)
+    }(Encoders.row(schema))
   }
 
   /** Per-chunk binary EROSION partials (6-connectivity) — [[localDilate]]'s
@@ -837,7 +777,7 @@ final class Volume(
     * needs against the face relation and keeps candidates with every need
     * confirmed — O(surface) rows move, the voxel relation never shuffles. */
   def localErode(query: Box): DataFrame = {
-    val c = ctx; val conf = hconf
+    val c = ctx
     require(c.numChannels == 1, "localErode: single-channel volumes only")
     val coord = StructType(Seq(
       StructField("x", IntegerType, nullable = false),
@@ -856,91 +796,60 @@ final class Volume(
         StructField("needs", ArrayType(coord, containsNull = false), nullable = false))),
         containsNull = false), nullable = false),
       StructField("face", ArrayType(coord, containsNull = false), nullable = false)))
-    val rowEnc = Encoders.row(schema)
-    val taskEnc = Encoders.product[(Int, Int, Int)]
-    val isFloat = c.dataType == graft.core.Meta.TFloat32 || c.dataType == graft.core.Meta.TFloat64
-    val qbox = query
-    chunkTasks(query).as(taskEnc).mapPartitions({ it =>
-      val fs = ChunkStore.fs(c.root, conf.conf)
-      it.flatMap { case (cx, cy, cz) =>
-        c.sliceAt(cx, cy, cz, qbox).iterator.flatMap { s =>
-          c.fetchChunk(fs, s) match {
-            case None if c.fillMissing => Iterator.empty // all-background
-            case None => throw new ChunkStore.MissingChunkException(c.keyOf(s))
-            case Some(blob) =>
-              val b = c.decodeChunk(s, blob)
-              val cut = s.cutoutBox
-              val nx = cut.x.len; val ny = cut.y.len; val nz = cut.z.len
-              @inline def li(lx: Int, ly: Int, lz: Int): Int = (lz * ny + ly) * nx + lx
-              val fg = new Array[Boolean](nx * ny * nz)
-              var nFg = 0L
-              var lz = 0
-              while (lz < nz) {
-                var ly = 0
-                while (ly < ny) {
-                  var lx = 0
-                  while (lx < nx) {
-                    val bx = cut.x.lo - b.origin._1 + lx
-                    val by = cut.y.lo - b.origin._2 + ly
-                    val bz = cut.z.lo - b.origin._3 + lz
-                    val v = if (isFloat) b.getDouble(bx, by, bz, 0) != 0.0
-                      else b.getLong(bx, by, bz, 0) != 0L
-                    if (v) { fg(li(lx, ly, lz)) = true; nFg += 1 }
-                    lx += 1
+    mapChunks(query) { (s, chunk) =>
+      chunk.iterator.map { b => // an absent chunk is all background: no row
+        val (cx, cy, cz) = (s.idx, s.idy, s.idz)
+        val cut = s.cutoutBox
+        val nx = cut.x.len; val ny = cut.y.len; val nz = cut.z.len
+        @inline def li(lx: Int, ly: Int, lz: Int): Int = (lz * ny + ly) * nx + lx
+        val (fg, nFg) = Volume.foreground(b, cut)
+        var nInner = 0L
+        val cand = scala.collection.mutable.ArrayBuffer.empty[Row]
+        val face = scala.collection.mutable.ArrayBuffer.empty[Row]
+        var lz = 0
+        while (lz < nz) {
+          var ly = 0
+          while (ly < ny) {
+            var lx = 0
+            while (lx < nx) {
+              if (fg(li(lx, ly, lz))) {
+                val gx = cut.x.lo + lx; val gy = cut.y.lo + ly; val gz = cut.z.lo + lz
+                val onFace = lx == 0 || lx == nx - 1 || ly == 0 || ly == ny - 1 ||
+                  lz == 0 || lz == nz - 1
+                if (onFace) face += Row(gx, gy, gz)
+                var localOk = true
+                var outOfBox = false
+                val needs = scala.collection.mutable.ArrayBuffer.empty[Row]
+                @inline def probe(dlx: Int, dly: Int, dlz: Int): Unit = {
+                  val tlx = lx + dlx; val tly = ly + dly; val tlz = lz + dlz
+                  if (tlx >= 0 && tlx < nx && tly >= 0 && tly < ny &&
+                    tlz >= 0 && tlz < nz) {
+                    if (!fg(li(tlx, tly, tlz))) localOk = false
+                  } else {
+                    val tx = gx + dlx; val ty = gy + dly; val tz = gz + dlz
+                    if (query.x.contains(tx) && query.y.contains(ty) && query.z.contains(tz))
+                      needs += Row(tx, ty, tz)
+                    else outOfBox = true // background by definition
                   }
-                  ly += 1
+                  ()
                 }
-                lz += 1
-              }
-              var nInner = 0L
-              val cand = scala.collection.mutable.ArrayBuffer.empty[Row]
-              val face = scala.collection.mutable.ArrayBuffer.empty[Row]
-              lz = 0
-              while (lz < nz) {
-                var ly = 0
-                while (ly < ny) {
-                  var lx = 0
-                  while (lx < nx) {
-                    if (fg(li(lx, ly, lz))) {
-                      val gx = cut.x.lo + lx; val gy = cut.y.lo + ly; val gz = cut.z.lo + lz
-                      val onFace = lx == 0 || lx == nx - 1 || ly == 0 || ly == ny - 1 ||
-                        lz == 0 || lz == nz - 1
-                      if (onFace) face += Row(gx, gy, gz)
-                      var localOk = true
-                      var outOfBox = false
-                      val needs = scala.collection.mutable.ArrayBuffer.empty[Row]
-                      @inline def probe(dlx: Int, dly: Int, dlz: Int): Unit = {
-                        val tlx = lx + dlx; val tly = ly + dly; val tlz = lz + dlz
-                        if (tlx >= 0 && tlx < nx && tly >= 0 && tly < ny &&
-                          tlz >= 0 && tlz < nz) {
-                          if (!fg(li(tlx, tly, tlz))) localOk = false
-                        } else {
-                          val tx = gx + dlx; val ty = gy + dly; val tz = gz + dlz
-                          if (qbox.x.contains(tx) && qbox.y.contains(ty) && qbox.z.contains(tz))
-                            needs += Row(tx, ty, tz)
-                          else outOfBox = true // background by definition
-                        }
-                        ()
-                      }
-                      probe(-1, 0, 0); probe(1, 0, 0)
-                      probe(0, -1, 0); probe(0, 1, 0)
-                      probe(0, 0, -1); probe(0, 0, 1)
-                      if (localOk && !outOfBox) {
-                        if (needs.isEmpty) nInner += 1
-                        else cand += Row(gx, gy, gz, needs.toSeq)
-                      }
-                    }
-                    lx += 1
-                  }
-                  ly += 1
+                probe(-1, 0, 0); probe(1, 0, 0)
+                probe(0, -1, 0); probe(0, 1, 0)
+                probe(0, 0, -1); probe(0, 0, 1)
+                if (localOk && !outOfBox) {
+                  if (needs.isEmpty) nInner += 1
+                  else cand += Row(gx, gy, gz, needs.toSeq)
                 }
-                lz += 1
               }
-              Iterator.single(Row(cx, cy, cz, nFg, nInner, cand.toSeq, face.toSeq))
+              lx += 1
+            }
+            ly += 1
           }
+          lz += 1
         }
+        Row(cx, cy, cz, nFg, nInner, cand.toSeq, face.toSeq)
       }
-    })(rowEnc)
+    }(Encoders.row(schema))
   }
 
   /** Per-chunk binary OPENING partials (erode → dilate, 6-connectivity) —
@@ -967,7 +876,7 @@ final class Volume(
     * The voxel relation never shuffles; see
     * [[graft.ops.ArrayOps.openStats]] for the relational combiner. */
   def localOpen(query: Box): DataFrame = {
-    val c = ctx; val conf = hconf
+    val c = ctx
     require(c.numChannels == 1, "localOpen: single-channel volumes only")
     val coord = StructType(Seq(
       StructField("x", IntegerType, nullable = false),
@@ -995,152 +904,121 @@ final class Volume(
         StructField("targets", ArrayType(target, containsNull = false), nullable = false))),
         containsNull = false), nullable = false),
       StructField("face", ArrayType(coord, containsNull = false), nullable = false)))
-    val rowEnc = Encoders.row(schema)
-    val taskEnc = Encoders.product[(Int, Int, Int)]
-    val isFloat = c.dataType == graft.core.Meta.TFloat32 || c.dataType == graft.core.Meta.TFloat64
-    val qbox = query
-    chunkTasks(query).as(taskEnc).mapPartitions({ it =>
-      val fs = ChunkStore.fs(c.root, conf.conf)
-      it.flatMap { case (cx, cy, cz) =>
-        c.sliceAt(cx, cy, cz, qbox).iterator.flatMap { s =>
-          c.fetchChunk(fs, s) match {
-            case None if c.fillMissing => Iterator.empty // all-background
-            case None => throw new ChunkStore.MissingChunkException(c.keyOf(s))
-            case Some(blob) =>
-              val b = c.decodeChunk(s, blob)
-              val cut = s.cutoutBox
-              val nx = cut.x.len; val ny = cut.y.len; val nz = cut.z.len
-              @inline def li(lx: Int, ly: Int, lz: Int): Int = (lz * ny + ly) * nx + lx
-              val fg = new Array[Boolean](nx * ny * nz)
-              var nFg = 0L
-              var lz = 0
-              while (lz < nz) {
-                var ly = 0
-                while (ly < ny) {
-                  var lx = 0
-                  while (lx < nx) {
-                    val bx = cut.x.lo - b.origin._1 + lx
-                    val by = cut.y.lo - b.origin._2 + ly
-                    val bz = cut.z.lo - b.origin._3 + lz
-                    val v = if (isFloat) b.getDouble(bx, by, bz, 0) != 0.0
-                      else b.getLong(bx, by, bz, 0) != 0L
-                    if (v) { fg(li(lx, ly, lz)) = true; nFg += 1 }
-                    lx += 1
-                  }
-                  ly += 1
-                }
-                lz += 1
-              }
-              // pass 1: interior erosion (non-face voxels — all 6 probes
-              // in-cut) and face candidates with needs + owner-resolved
-              // dilation targets
-              val opened = new Array[Boolean](nx * ny * nz)
-              val cand = scala.collection.mutable.ArrayBuffer.empty[Row]
-              val face = scala.collection.mutable.ArrayBuffer.empty[Row]
-              lz = 0
-              while (lz < nz) {
-                var ly = 0
-                while (ly < ny) {
-                  var lx = 0
-                  while (lx < nx) {
-                    if (fg(li(lx, ly, lz))) {
-                      val gx = cut.x.lo + lx; val gy = cut.y.lo + ly; val gz = cut.z.lo + lz
-                      val onFace = lx == 0 || lx == nx - 1 || ly == 0 || ly == ny - 1 ||
-                        lz == 0 || lz == nz - 1
-                      if (onFace) {
-                        face += Row(gx, gy, gz)
-                        // face candidate: in-cut neighbors must pass; out-of-
-                        // cut neighbors inside the box become needs; an
-                        // out-of-box neighbor is background → dead
-                        var localOk = true
-                        var outOfBox = false
-                        val needs = scala.collection.mutable.ArrayBuffer.empty[Row]
-                        @inline def probe(dlx: Int, dly: Int, dlz: Int): Unit = {
-                          val tlx = lx + dlx; val tly = ly + dly; val tlz = lz + dlz
-                          if (tlx >= 0 && tlx < nx && tly >= 0 && tly < ny &&
-                            tlz >= 0 && tlz < nz) {
-                            if (!fg(li(tlx, tly, tlz))) localOk = false
-                          } else {
-                            val tx = gx + dlx; val ty = gy + dly; val tz = gz + dlz
-                            if (qbox.x.contains(tx) && qbox.y.contains(ty) && qbox.z.contains(tz))
-                              needs += Row(tx, ty, tz)
-                            else outOfBox = true
-                          }
-                          ()
-                        }
-                        probe(-1, 0, 0); probe(1, 0, 0)
-                        probe(0, -1, 0); probe(0, 1, 0)
-                        probe(0, 0, -1); probe(0, 0, 1)
-                        if (localOk && !outOfBox) {
-                          // all 7 dilation targets are in-box (an in-box
-                          // eroded voxel's neighbors are in-box — its
-                          // out-of-box neighbors would have killed it);
-                          // owner chunk shifts only on the crossed axis
-                          val targets = scala.collection.mutable.ArrayBuffer.empty[Row]
-                          @inline def tgt(dlx: Int, dly: Int, dlz: Int): Unit = {
-                            val tlx = lx + dlx; val tly = ly + dly; val tlz = lz + dlz
-                            val dcx = if (tlx < 0) -1 else if (tlx >= nx) 1 else 0
-                            val dcy = if (tly < 0) -1 else if (tly >= ny) 1 else 0
-                            val dcz = if (tlz < 0) -1 else if (tlz >= nz) 1 else 0
-                            targets += Row(cx + dcx, cy + dcy, cz + dcz,
-                              gx + dlx, gy + dly, gz + dlz)
-                            ()
-                          }
-                          tgt(0, 0, 0)
-                          tgt(-1, 0, 0); tgt(1, 0, 0)
-                          tgt(0, -1, 0); tgt(0, 1, 0)
-                          tgt(0, 0, -1); tgt(0, 0, 1)
-                          cand += Row(gx, gy, gz, needs.toSeq, targets.toSeq)
-                        }
-                      } else {
-                        // interior voxel: erosion fully local
-                        var ok = true
-                        if (!fg(li(lx - 1, ly, lz)) || !fg(li(lx + 1, ly, lz)) ||
-                          !fg(li(lx, ly - 1, lz)) || !fg(li(lx, ly + 1, lz)) ||
-                          !fg(li(lx, ly, lz - 1)) || !fg(li(lx, ly, lz + 1))) ok = false
-                        if (ok) {
-                          // dilate the interior-eroded voxel: all 7 in-cut
-                          opened(li(lx, ly, lz)) = true
-                          opened(li(lx - 1, ly, lz)) = true
-                          opened(li(lx + 1, ly, lz)) = true
-                          opened(li(lx, ly - 1, lz)) = true
-                          opened(li(lx, ly + 1, lz)) = true
-                          opened(li(lx, ly, lz - 1)) = true
-                          opened(li(lx, ly, lz + 1)) = true
-                        }
-                      }
+    mapChunks(query) { (s, chunk) =>
+      chunk.iterator.map { b => // an absent chunk is all background: no row
+        val (cx, cy, cz) = (s.idx, s.idy, s.idz)
+        val cut = s.cutoutBox
+        val nx = cut.x.len; val ny = cut.y.len; val nz = cut.z.len
+        @inline def li(lx: Int, ly: Int, lz: Int): Int = (lz * ny + ly) * nx + lx
+        val (fg, nFg) = Volume.foreground(b, cut)
+        // pass 1: interior erosion (non-face voxels — all 6 probes
+        // in-cut) and face candidates with needs + owner-resolved
+        // dilation targets
+        val opened = new Array[Boolean](nx * ny * nz)
+        val cand = scala.collection.mutable.ArrayBuffer.empty[Row]
+        val face = scala.collection.mutable.ArrayBuffer.empty[Row]
+        var lz = 0
+        while (lz < nz) {
+          var ly = 0
+          while (ly < ny) {
+            var lx = 0
+            while (lx < nx) {
+              if (fg(li(lx, ly, lz))) {
+                val gx = cut.x.lo + lx; val gy = cut.y.lo + ly; val gz = cut.z.lo + lz
+                val onFace = lx == 0 || lx == nx - 1 || ly == 0 || ly == ny - 1 ||
+                  lz == 0 || lz == nz - 1
+                if (onFace) {
+                  face += Row(gx, gy, gz)
+                  // face candidate: in-cut neighbors must pass; out-of-
+                  // cut neighbors inside the box become needs; an
+                  // out-of-box neighbor is background → dead
+                  var localOk = true
+                  var outOfBox = false
+                  val needs = scala.collection.mutable.ArrayBuffer.empty[Row]
+                  @inline def probe(dlx: Int, dly: Int, dlz: Int): Unit = {
+                    val tlx = lx + dlx; val tly = ly + dly; val tlz = lz + dlz
+                    if (tlx >= 0 && tlx < nx && tly >= 0 && tly < ny &&
+                      tlz >= 0 && tlz < nz) {
+                      if (!fg(li(tlx, tly, tlz))) localOk = false
+                    } else {
+                      val tx = gx + dlx; val ty = gy + dly; val tz = gz + dlz
+                      if (query.x.contains(tx) && query.y.contains(ty) && query.z.contains(tz))
+                        needs += Row(tx, ty, tz)
+                      else outOfBox = true
                     }
-                    lx += 1
+                    ()
                   }
-                  ly += 1
-                }
-                lz += 1
-              }
-              var nOpenLoc = 0L
-              val rim = scala.collection.mutable.ArrayBuffer.empty[Row]
-              lz = 0
-              while (lz < nz) {
-                var ly = 0
-                while (ly < ny) {
-                  var lx = 0
-                  while (lx < nx) {
-                    if (opened(li(lx, ly, lz))) {
-                      nOpenLoc += 1
-                      if (lx <= 1 || lx >= nx - 2 || ly <= 1 || ly >= ny - 2 ||
-                        lz <= 1 || lz >= nz - 2)
-                        rim += Row(cut.x.lo + lx, cut.y.lo + ly, cut.z.lo + lz)
+                  probe(-1, 0, 0); probe(1, 0, 0)
+                  probe(0, -1, 0); probe(0, 1, 0)
+                  probe(0, 0, -1); probe(0, 0, 1)
+                  if (localOk && !outOfBox) {
+                    // all 7 dilation targets are in-box (an in-box
+                    // eroded voxel's neighbors are in-box — its
+                    // out-of-box neighbors would have killed it);
+                    // owner chunk shifts only on the crossed axis
+                    val targets = scala.collection.mutable.ArrayBuffer.empty[Row]
+                    @inline def tgt(dlx: Int, dly: Int, dlz: Int): Unit = {
+                      val tlx = lx + dlx; val tly = ly + dly; val tlz = lz + dlz
+                      val dcx = if (tlx < 0) -1 else if (tlx >= nx) 1 else 0
+                      val dcy = if (tly < 0) -1 else if (tly >= ny) 1 else 0
+                      val dcz = if (tlz < 0) -1 else if (tlz >= nz) 1 else 0
+                      targets += Row(cx + dcx, cy + dcy, cz + dcz,
+                        gx + dlx, gy + dly, gz + dlz)
+                      ()
                     }
-                    lx += 1
+                    tgt(0, 0, 0)
+                    tgt(-1, 0, 0); tgt(1, 0, 0)
+                    tgt(0, -1, 0); tgt(0, 1, 0)
+                    tgt(0, 0, -1); tgt(0, 0, 1)
+                    cand += Row(gx, gy, gz, needs.toSeq, targets.toSeq)
                   }
-                  ly += 1
+                } else {
+                  // interior voxel: erosion fully local
+                  var ok = true
+                  if (!fg(li(lx - 1, ly, lz)) || !fg(li(lx + 1, ly, lz)) ||
+                    !fg(li(lx, ly - 1, lz)) || !fg(li(lx, ly + 1, lz)) ||
+                    !fg(li(lx, ly, lz - 1)) || !fg(li(lx, ly, lz + 1))) ok = false
+                  if (ok) {
+                    // dilate the interior-eroded voxel: all 7 in-cut
+                    opened(li(lx, ly, lz)) = true
+                    opened(li(lx - 1, ly, lz)) = true
+                    opened(li(lx + 1, ly, lz)) = true
+                    opened(li(lx, ly - 1, lz)) = true
+                    opened(li(lx, ly + 1, lz)) = true
+                    opened(li(lx, ly, lz - 1)) = true
+                    opened(li(lx, ly, lz + 1)) = true
+                  }
                 }
-                lz += 1
               }
-              Iterator.single(Row(cx, cy, cz, nFg, nOpenLoc, rim.toSeq, cand.toSeq, face.toSeq))
+              lx += 1
+            }
+            ly += 1
           }
+          lz += 1
         }
+        var nOpenLoc = 0L
+        val rim = scala.collection.mutable.ArrayBuffer.empty[Row]
+        lz = 0
+        while (lz < nz) {
+          var ly = 0
+          while (ly < ny) {
+            var lx = 0
+            while (lx < nx) {
+              if (opened(li(lx, ly, lz))) {
+                nOpenLoc += 1
+                if (lx <= 1 || lx >= nx - 2 || ly <= 1 || ly >= ny - 2 ||
+                  lz <= 1 || lz >= nz - 2)
+                  rim += Row(cut.x.lo + lx, cut.y.lo + ly, cut.z.lo + lz)
+              }
+              lx += 1
+            }
+            ly += 1
+          }
+          lz += 1
+        }
+        Row(cx, cy, cz, nFg, nOpenLoc, rim.toSeq, cand.toSeq, face.toSeq)
       }
-    })(rowEnc)
+    }(Encoders.row(schema))
   }
 
   /** Per-chunk ZONE-MAP statistics — the parquet-footer idea applied to
@@ -1149,9 +1027,9 @@ final class Volume(
     * maintenance artifact — chunk-grain, so petavoxel volumes yield a
     * megabyte-scale relation), it lets predicate scans skip whole chunks
     * without fetching them ([[toVoxelsAtLeast]]). Missing chunks report
-    * (0, 0) under fillMissing. Integer single-channel volumes only. */
+    * (0, 0, n) under fillMissing. Integer single-channel volumes only. */
   def chunkStats(query: Box): DataFrame = {
-    val c = ctx; val conf = hconf
+    val c = ctx
     require(c.numChannels == 1, "chunkStats: single-channel volumes only")
     require(c.dataType != graft.core.Meta.TFloat32 && c.dataType != graft.core.Meta.TFloat64,
       "chunkStats: integer volumes only")
@@ -1162,41 +1040,31 @@ final class Volume(
       StructField("vmin", LongType, nullable = false),
       StructField("vmax", LongType, nullable = false),
       StructField("n", LongType, nullable = false)))
-    val rowEnc = Encoders.row(schema)
-    val taskEnc = Encoders.product[(Int, Int, Int)]
-    val qbox = query
-    chunkTasks(query).as(taskEnc).mapPartitions({ it =>
-      val fs = ChunkStore.fs(c.root, conf.conf)
-      it.flatMap { case (cx, cy, cz) =>
-        c.sliceAt(cx, cy, cz, qbox).iterator.map { s =>
-          val cut = s.cutoutBox
-          val nTot = cut.x.len.toLong * cut.y.len * cut.z.len
-          c.fetchChunk(fs, s) match {
-            case None if c.fillMissing => Row(cx, cy, cz, 0L, 0L, nTot)
-            case None => throw new ChunkStore.MissingChunkException(c.keyOf(s))
-            case Some(blob) =>
-              val b = c.decodeChunk(s, blob)
-              var mn = Long.MaxValue; var mx = Long.MinValue
-              var z = cut.z.lo
-              while (z <= cut.z.hi) {
-                var y = cut.y.lo
-                while (y <= cut.y.hi) {
-                  var x = cut.x.lo
-                  while (x <= cut.x.hi) {
-                    val v = b.getLong(x - b.origin._1, y - b.origin._2, z - b.origin._3, 0)
-                    if (v < mn) mn = v
-                    if (v > mx) mx = v
-                    x += 1
-                  }
-                  y += 1
-                }
-                z += 1
+    mapChunks(query) { (s, chunk) =>
+      val cut = s.cutoutBox
+      val nTot = cut.x.len.toLong * cut.y.len * cut.z.len
+      Iterator.single(chunk match {
+        case None => Row(s.idx, s.idy, s.idz, 0L, 0L, nTot)
+        case Some(b) =>
+          var mn = Long.MaxValue; var mx = Long.MinValue
+          var z = cut.z.lo
+          while (z <= cut.z.hi) {
+            var y = cut.y.lo
+            while (y <= cut.y.hi) {
+              var x = cut.x.lo
+              while (x <= cut.x.hi) {
+                val v = b.getLong(x - b.origin._1, y - b.origin._2, z - b.origin._3, 0)
+                if (v < mn) mn = v
+                if (v > mx) mx = v
+                x += 1
               }
-              Row(cx, cy, cz, mn, mx, nTot)
+              y += 1
+            }
+            z += 1
           }
-        }
-      }
-    })(rowEnc)
+          Row(s.idx, s.idy, s.idz, mn, mx, nTot)
+      })
+    }(Encoders.row(schema))
   }
 
   /** Zone-map-PRUNED predicate scan: voxels of `query` with `value ≥ t`,
@@ -1212,39 +1080,25 @@ final class Volume(
     * (spec-proven: deleting them from the store does not disturb the
     * pruned scan). Integer single-channel volumes only. */
   def toVoxelsAtLeast(query: Box, t: Long, stats: Option[DataFrame] = None): DataFrame = {
-    val c = ctx; val conf = hconf
+    val c = ctx
     require(c.numChannels == 1, "toVoxelsAtLeast: single-channel volumes only")
     val kept = stats.getOrElse(chunkStats(query))
       .filter(col("vmax") >= t).select(col("cx"), col("cy"), col("cz"))
     val tasks = chunkTasks(query)
       .join(org.apache.spark.sql.functions.broadcast(kept), Seq("cx", "cy", "cz"))
-    val schema = voxelSchema
-    val rowEnc = Encoders.row(schema)
-    val taskEnc = Encoders.product[(Int, Int, Int)]
-    val qbox = query
-    tasks.as(taskEnc).mapPartitions({ it =>
-      val fs = ChunkStore.fs(c.root, conf.conf)
-      it.flatMap { case (cx, cy, cz) =>
-        c.sliceAt(cx, cy, cz, qbox).toSeq.flatMap { s =>
-          val bufOpt = c.fetchChunk(fs, s) match {
-            case Some(blob) => Some(c.decodeChunk(s, blob))
-            case None if c.fillMissing => None
-            case None => throw new ChunkStore.MissingChunkException(c.keyOf(s))
-          }
-          val cut = s.cutoutBox
-          for {
-            z <- (cut.z.lo to cut.z.hi).iterator
-            y <- (cut.y.lo to cut.y.hi).iterator
-            x <- (cut.x.lo to cut.x.hi).iterator
-            lv = bufOpt match {
-              case Some(b) => b.getLong(x - b.origin._1, y - b.origin._2, z - b.origin._3, 0)
-              case None => 0L
-            }
-            if lv >= t
-          } yield Row(x, y, z, 0, Volume.widenedOf(c.dataType, lv))
+    mapChunks(query, Some(tasks)) { (s, bufOpt) =>
+      val cut = s.cutoutBox
+      for {
+        z <- (cut.z.lo to cut.z.hi).iterator
+        y <- (cut.y.lo to cut.y.hi).iterator
+        x <- (cut.x.lo to cut.x.hi).iterator
+        lv = bufOpt match {
+          case Some(b) => b.getLong(x - b.origin._1, y - b.origin._2, z - b.origin._3, 0)
+          case None => 0L
         }
-      }
-    })(rowEnc)
+        if lv >= t
+      } yield Row(x, y, z, 0, Volume.widenedOf(c.dataType, lv))
+    }(Encoders.row(voxelSchema))
   }
 
   /** Per-chunk box-BLUR partials (6-connectivity boundary-aware mean) —
@@ -1270,7 +1124,7 @@ final class Volume(
     * shuffles. A missing chunk reads as zeros (fill-missing semantics),
     * still contributing its geometry. Integer volumes only. */
   def localBlur(query: Box): DataFrame = {
-    val c = ctx; val conf = hconf
+    val c = ctx
     require(c.numChannels == 1, "localBlur: single-channel volumes only")
     require(c.dataType != graft.core.Meta.TFloat32 && c.dataType != graft.core.Meta.TFloat64,
       "localBlur: integer volumes only (exact ⌊s/c⌋ gate semantics)")
@@ -1299,90 +1153,61 @@ final class Volume(
         StructField("z", IntegerType, nullable = false),
         StructField("v", LongType, nullable = false))), containsNull = false),
         nullable = false)))
-    val rowEnc = Encoders.row(schema)
-    val taskEnc = Encoders.product[(Int, Int, Int)]
-    val qbox = query
-    chunkTasks(query).as(taskEnc).mapPartitions({ it =>
-      val fs = ChunkStore.fs(c.root, conf.conf)
-      it.flatMap { case (cx, cy, cz) =>
-        c.sliceAt(cx, cy, cz, qbox).iterator.map { s =>
-          val blobOpt = c.fetchChunk(fs, s) match {
-            case some @ Some(_) => some
-            case None if c.fillMissing => None // zero-filled cut
-            case None => throw new ChunkStore.MissingChunkException(c.keyOf(s))
-          }
-          val bOpt = blobOpt.map(c.decodeChunk(s, _))
-          val cut = s.cutoutBox
-          val nx = cut.x.len; val ny = cut.y.len; val nz = cut.z.len
-          @inline def li(lx: Int, ly: Int, lz: Int): Int = (lz * ny + ly) * nx + lx
-          val vv = new Array[Long](nx * ny * nz)
-          bOpt.foreach { b =>
-            var lz = 0
-            while (lz < nz) {
-              var ly = 0
-              while (ly < ny) {
-                var lx = 0
-                while (lx < nx) {
-                  vv(li(lx, ly, lz)) = b.getLong(
-                    cut.x.lo - b.origin._1 + lx, cut.y.lo - b.origin._2 + ly,
-                    cut.z.lo - b.origin._3 + lz, 0)
-                  lx += 1
-                }
-                ly += 1
+    mapChunks(query) { (s, chunk) =>
+      val (cx, cy, cz) = (s.idx, s.idy, s.idz)
+      val cut = s.cutoutBox
+      val nx = cut.x.len; val ny = cut.y.len; val nz = cut.z.len
+      @inline def li(lx: Int, ly: Int, lz: Int): Int = (lz * ny + ly) * nx + lx
+      // an absent chunk is a zero-filled cut, still contributing geometry
+      val vv = chunk.fold(new Array[Long](nx * ny * nz))(Volume.cutValues(_, cut))
+      val zn = new Array[Long](nz); val zs = new Array[Long](nz)
+      val needs = scala.collection.mutable.ArrayBuffer.empty[Row]
+      val vals = scala.collection.mutable.ArrayBuffer.empty[Row]
+      var lz = 0
+      while (lz < nz) {
+        var ly = 0
+        while (ly < ny) {
+          var lx = 0
+          while (lx < nx) {
+            val gx = cut.x.lo + lx; val gy = cut.y.lo + ly; val gz = cut.z.lo + lz
+            var s0 = vv(li(lx, ly, lz))
+            var cTot = 1
+            val miss = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int)]
+            @inline def probe(dlx: Int, dly: Int, dlz: Int): Unit = {
+              val tx = gx + dlx; val ty = gy + dly; val tz = gz + dlz
+              if (query.x.contains(tx) && query.y.contains(ty) && query.z.contains(tz)) {
+                cTot += 1
+                val tlx = lx + dlx; val tly = ly + dly; val tlz = lz + dlz
+                if (tlx >= 0 && tlx < nx && tly >= 0 && tly < ny && tlz >= 0 && tlz < nz)
+                  s0 += vv(li(tlx, tly, tlz))
+                else miss += ((tx, ty, tz))
               }
-              lz += 1
+              ()
             }
-          }
-          val zn = new Array[Long](nz); val zs = new Array[Long](nz)
-          val needs = scala.collection.mutable.ArrayBuffer.empty[Row]
-          val vals = scala.collection.mutable.ArrayBuffer.empty[Row]
-          var lz = 0
-          while (lz < nz) {
-            var ly = 0
-            while (ly < ny) {
-              var lx = 0
-              while (lx < nx) {
-                val gx = cut.x.lo + lx; val gy = cut.y.lo + ly; val gz = cut.z.lo + lz
-                var s0 = vv(li(lx, ly, lz))
-                var cTot = 1
-                val miss = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int)]
-                @inline def probe(dlx: Int, dly: Int, dlz: Int): Unit = {
-                  val tx = gx + dlx; val ty = gy + dly; val tz = gz + dlz
-                  if (qbox.x.contains(tx) && qbox.y.contains(ty) && qbox.z.contains(tz)) {
-                    cTot += 1
-                    val tlx = lx + dlx; val tly = ly + dly; val tlz = lz + dlz
-                    if (tlx >= 0 && tlx < nx && tly >= 0 && tly < ny && tlz >= 0 && tlz < nz)
-                      s0 += vv(li(tlx, tly, tlz))
-                    else miss += ((tx, ty, tz))
-                  }
-                  ()
-                }
-                probe(-1, 0, 0); probe(1, 0, 0)
-                probe(0, -1, 0); probe(0, 1, 0)
-                probe(0, 0, -1); probe(0, 0, 1)
-                if (miss.isEmpty) {
-                  zn(lz) += 1
-                  zs(lz) += Math.floorDiv(s0, cTot.toLong)
-                } else {
-                  miss.foreach { case (tx, ty, tz) =>
-                    needs += Row(gx, gy, gz, s0, cTot, tx, ty, tz)
-                  }
-                }
-                if (lx == 0 || lx == nx - 1 || ly == 0 || ly == ny - 1 ||
-                  lz == 0 || lz == nz - 1)
-                  vals += Row(gx, gy, gz, vv(li(lx, ly, lz)))
-                lx += 1
+            probe(-1, 0, 0); probe(1, 0, 0)
+            probe(0, -1, 0); probe(0, 1, 0)
+            probe(0, 0, -1); probe(0, 0, 1)
+            if (miss.isEmpty) {
+              zn(lz) += 1
+              zs(lz) += Math.floorDiv(s0, cTot.toLong)
+            } else {
+              miss.foreach { case (tx, ty, tz) =>
+                needs += Row(gx, gy, gz, s0, cTot, tx, ty, tz)
               }
-              ly += 1
             }
-            lz += 1
+            if (lx == 0 || lx == nx - 1 || ly == 0 || ly == ny - 1 ||
+              lz == 0 || lz == nz - 1)
+              vals += Row(gx, gy, gz, vv(li(lx, ly, lz)))
+            lx += 1
           }
-          val zsums = (0 until nz).filter(zn(_) > 0)
-            .map(i => Row(cut.z.lo + i, zn(i), zs(i)))
-          Row(cx, cy, cz, zsums, needs.toSeq, vals.toSeq)
+          ly += 1
         }
+        lz += 1
       }
-    })(rowEnc)
+      val zsums = (0 until nz).filter(zn(_) > 0)
+        .map(i => Row(cut.z.lo + i, zn(i), zs(i)))
+      Iterator.single(Row(cx, cy, cz, zsums, needs.toSeq, vals.toSeq))
+    }(Encoders.row(schema))
   }
 
   /** Per-chunk CONTACT-SURFACE partials over a labeled segmentation volume
@@ -1408,7 +1233,7 @@ final class Volume(
     * probe→negface on coordinates, and folds both into per-label-pair
     * totals. Integer label volumes only. */
   def localContacts(query: Box): DataFrame = {
-    val c = ctx; val conf = hconf
+    val c = ctx
     require(c.numChannels == 1, "localContacts: single-channel volumes only")
     require(c.dataType != graft.core.Meta.TFloat32 && c.dataType != graft.core.Meta.TFloat64,
       "localContacts: integer label volumes only")
@@ -1428,77 +1253,51 @@ final class Volume(
         nullable = false),
       StructField("probe", ArrayType(labeled, containsNull = false), nullable = false),
       StructField("negface", ArrayType(labeled, containsNull = false), nullable = false)))
-    val rowEnc = Encoders.row(schema)
-    val taskEnc = Encoders.product[(Int, Int, Int)]
-    val qbox = query
-    chunkTasks(query).as(taskEnc).mapPartitions({ it =>
-      val fs = ChunkStore.fs(c.root, conf.conf)
-      it.flatMap { case (cx, cy, cz) =>
-        c.sliceAt(cx, cy, cz, qbox).iterator.flatMap { s =>
-          c.fetchChunk(fs, s) match {
-            case None if c.fillMissing => Iterator.empty // all-background
-            case None => throw new ChunkStore.MissingChunkException(c.keyOf(s))
-            case Some(blob) =>
-              val b = c.decodeChunk(s, blob)
-              val cut = s.cutoutBox
-              val nx = cut.x.len; val ny = cut.y.len; val nz = cut.z.len
-              @inline def li(lx: Int, ly: Int, lz: Int): Int = (lz * ny + ly) * nx + lx
-              val lab = new Array[Long](nx * ny * nz)
-              var lz = 0
-              while (lz < nz) {
-                var ly = 0
-                while (ly < ny) {
-                  var lx = 0
-                  while (lx < nx) {
-                    lab(li(lx, ly, lz)) = b.getLong(
-                      cut.x.lo - b.origin._1 + lx, cut.y.lo - b.origin._2 + ly,
-                      cut.z.lo - b.origin._3 + lz, 0)
-                    lx += 1
-                  }
-                  ly += 1
-                }
-                lz += 1
-              }
-              val pairCnt = scala.collection.mutable.HashMap.empty[(Long, Long), Long]
-              val probe = scala.collection.mutable.ArrayBuffer.empty[Row]
-              val negface = scala.collection.mutable.ArrayBuffer.empty[Row]
-              @inline def addPair(a: Long, bb: Long): Unit = {
-                val k = if (a < bb) (a, bb) else (bb, a)
-                pairCnt.update(k, pairCnt.getOrElse(k, 0L) + 1L)
-              }
-              lz = 0
-              while (lz < nz) {
-                var ly = 0
-                while (ly < ny) {
-                  var lx = 0
-                  while (lx < nx) {
-                    val v = lab(li(lx, ly, lz))
-                    if (v != 0L) {
-                      val gx = cut.x.lo + lx; val gy = cut.y.lo + ly; val gz = cut.z.lo + lz
-                      // local +x/+y/+z pairs — each counted exactly once
-                      if (lx + 1 < nx) { val n = lab(li(lx + 1, ly, lz)); if (n != 0L && n != v) addPair(v, n) }
-                      if (ly + 1 < ny) { val n = lab(li(lx, ly + 1, lz)); if (n != 0L && n != v) addPair(v, n) }
-                      if (lz + 1 < nz) { val n = lab(li(lx, ly, lz + 1)); if (n != 0L && n != v) addPair(v, n) }
-                      // forward halo: positive faces push a probe across the seam
-                      if (lx == nx - 1 && qbox.x.contains(gx + 1)) probe += Row(gx + 1, gy, gz, v)
-                      if (ly == ny - 1 && qbox.y.contains(gy + 1)) probe += Row(gx, gy + 1, gz, v)
-                      if (lz == nz - 1 && qbox.z.contains(gz + 1)) probe += Row(gx, gy, gz + 1, v)
-                      // backward presence: negative faces are probe targets
-                      if (lx == 0 || ly == 0 || lz == 0) negface += Row(gx, gy, gz, v)
-                    }
-                    lx += 1
-                  }
-                  ly += 1
-                }
-                lz += 1
-              }
-              val pairs = pairCnt.toSeq.sortBy(_._1)
-                .map { case ((a, bb), n) => Row(a, bb, n) }
-              Iterator.single(Row(cx, cy, cz, pairs, probe.toSeq, negface.toSeq))
-          }
+    mapChunks(query) { (s, chunk) =>
+      chunk.iterator.map { b => // an absent chunk is all background: no row
+        val (cx, cy, cz) = (s.idx, s.idy, s.idz)
+        val cut = s.cutoutBox
+        val nx = cut.x.len; val ny = cut.y.len; val nz = cut.z.len
+        @inline def li(lx: Int, ly: Int, lz: Int): Int = (lz * ny + ly) * nx + lx
+        val lab = Volume.cutValues(b, cut)
+        val pairCnt = scala.collection.mutable.HashMap.empty[(Long, Long), Long]
+        val probe = scala.collection.mutable.ArrayBuffer.empty[Row]
+        val negface = scala.collection.mutable.ArrayBuffer.empty[Row]
+        @inline def addPair(a: Long, bb: Long): Unit = {
+          val k = if (a < bb) (a, bb) else (bb, a)
+          pairCnt.update(k, pairCnt.getOrElse(k, 0L) + 1L)
         }
+        var lz = 0
+        while (lz < nz) {
+          var ly = 0
+          while (ly < ny) {
+            var lx = 0
+            while (lx < nx) {
+              val v = lab(li(lx, ly, lz))
+              if (v != 0L) {
+                val gx = cut.x.lo + lx; val gy = cut.y.lo + ly; val gz = cut.z.lo + lz
+                // local +x/+y/+z pairs — each counted exactly once
+                if (lx + 1 < nx) { val n = lab(li(lx + 1, ly, lz)); if (n != 0L && n != v) addPair(v, n) }
+                if (ly + 1 < ny) { val n = lab(li(lx, ly + 1, lz)); if (n != 0L && n != v) addPair(v, n) }
+                if (lz + 1 < nz) { val n = lab(li(lx, ly, lz + 1)); if (n != 0L && n != v) addPair(v, n) }
+                // forward halo: positive faces push a probe across the seam
+                if (lx == nx - 1 && query.x.contains(gx + 1)) probe += Row(gx + 1, gy, gz, v)
+                if (ly == ny - 1 && query.y.contains(gy + 1)) probe += Row(gx, gy + 1, gz, v)
+                if (lz == nz - 1 && query.z.contains(gz + 1)) probe += Row(gx, gy, gz + 1, v)
+                // backward presence: negative faces are probe targets
+                if (lx == 0 || ly == 0 || lz == 0) negface += Row(gx, gy, gz, v)
+              }
+              lx += 1
+            }
+            ly += 1
+          }
+          lz += 1
+        }
+        val pairs = pairCnt.toSeq.sortBy(_._1)
+          .map { case ((a, bb), n) => Row(a, bb, n) }
+        Row(cx, cy, cz, pairs, probe.toSeq, negface.toSeq)
       }
-    })(rowEnc)
+    }(Encoders.row(schema))
   }
 
   /** The whole volume as a Catalyst-native voxel relation: a custom
@@ -1541,7 +1340,7 @@ final class Volume(
       "write start must align with the chunk grid (reference: src/modes/multithreads.jl:45-47)")
     require(buf.nc == meta.numChannels, "channel count mismatch")
     require(buf.dataType == meta.dataType, "dtype mismatch")
-    val c = ctx; val conf = hconf
+    val c = ctx; val conf = c.hadoopConf(spark)
     val bufBc = spark.sparkContext.broadcast(buf)
     /** Encoded bytes for one chunk of the write, read-modify-merged when the
       * write box only partially covers it (so existing data survives). The
@@ -1627,7 +1426,7 @@ final class Volume(
     * sharded layouts concurrent jobs must target disjoint SHARDS, not just
     * disjoint chunks. */
   def fromVoxels(df: DataFrame): Long = {
-    val c = ctx; val conf = hconf
+    val c = ctx; val conf = c.hadoopConf(spark)
     val (csx, csy, csz) = ctx.chunkSize
     val ox = Grid.gridOffset(c.voxelOffset._1, csx)
     val oy = Grid.gridOffset(c.voxelOffset._2, csy)
@@ -1745,7 +1544,7 @@ final class Volume(
     * carried by the listing itself), parse names back to grid coords,
     * bounds-filter to the query's id ranges. */
   private def listedChunkSizes(query: Box, caller: String): Dataset[(Int, Int, Int, Long)] = {
-    val c = ctx; val conf = hconf
+    val c = ctx; val conf = c.hadoopConf(spark)
     require(c.shard.isEmpty,
       s"$caller: sharded stores enumerate via the shard index (one cached GET per shard)")
     implicit val enc4 = Encoders.product[(Int, Int, Int, Long)]
@@ -1807,7 +1606,7 @@ final class Volume(
     *  (one cached GET per shard, then in-memory lookups per cell), already
     *  O(shard objects) I/O. */
   def missingChunks(query: Box, planning: String = "auto"): Dataset[String] = {
-    val c = ctx; val conf = hconf
+    val c = ctx; val conf = c.hadoopConf(spark)
     implicit val se = Encoders.STRING
     val useListing = planning match {
       case "listing" => true
@@ -1902,6 +1701,57 @@ object Volume {
     case TUInt16 => v.toInt
     case TUInt32 => v
     case other => throw new IllegalArgumentException(s"widenedOf: integer types only, got $other")
+  }
+
+  /** Foreground mask (nonzero voxels) of a chunk's cut box in the per-chunk
+    * kernels' `(lz * ny + ly) * nx + lx` layout, with its foreground count. */
+  private def foreground(b: VoxelBuffer, cut: Box): (Array[Boolean], Long) = {
+    val nx = cut.x.len; val ny = cut.y.len; val nz = cut.z.len
+    val isFloat = b.dataType == TFloat32 || b.dataType == TFloat64
+    val fg = new Array[Boolean](nx * ny * nz)
+    var nFg = 0L
+    var lz = 0
+    while (lz < nz) {
+      var ly = 0
+      while (ly < ny) {
+        var lx = 0
+        while (lx < nx) {
+          val bx = cut.x.lo - b.origin._1 + lx
+          val by = cut.y.lo - b.origin._2 + ly
+          val bz = cut.z.lo - b.origin._3 + lz
+          val v = if (isFloat) b.getDouble(bx, by, bz, 0) != 0.0
+            else b.getLong(bx, by, bz, 0) != 0L
+          if (v) { fg((lz * ny + ly) * nx + lx) = true; nFg += 1 }
+          lx += 1
+        }
+        ly += 1
+      }
+      lz += 1
+    }
+    (fg, nFg)
+  }
+
+  /** Channel-0 values of a chunk's cut box as a dense `Long[]` in the same
+    * layout as [[foreground]]. */
+  private def cutValues(b: VoxelBuffer, cut: Box): Array[Long] = {
+    val nx = cut.x.len; val ny = cut.y.len; val nz = cut.z.len
+    val vv = new Array[Long](nx * ny * nz)
+    var lz = 0
+    while (lz < nz) {
+      var ly = 0
+      while (ly < ny) {
+        var lx = 0
+        while (lx < nx) {
+          vv((lz * ny + ly) * nx + lx) = b.getLong(
+            cut.x.lo - b.origin._1 + lx, cut.y.lo - b.origin._2 + ly,
+            cut.z.lo - b.origin._3 + lz, 0)
+          lx += 1
+        }
+        ly += 1
+      }
+      lz += 1
+    }
+    vv
   }
 
   def zeroValue(t: VoxelType): Any = t match {

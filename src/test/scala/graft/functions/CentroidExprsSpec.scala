@@ -104,6 +104,24 @@ class CentroidExprsSpec extends AnyFunSuite {
     assert((0 until 150 by 10).forall(i => kernel(i.toLong) == 2L))
   }
 
+  test("centroid_nearest_limb rejects scaled coordinates past 1e9 instead of wrapping int64") {
+    // |scaled| <= 1e9 keeps every squared diff <= 4e18; at 2e9 against a
+    // -2e9 centroid the square is 1.6e19 and would wrap silently
+    val cents = Array(Array(0L, 0L), Array(1000000000L, -1000000000L))
+    import spark.implicits._
+    val ok = Seq((1L, Seq(1000000000L, -1000000000L))).toDF("vec_id", "ri")
+      .select(CentroidExprs.centroid_nearest_limb(col("ri"), cents)).as[Long].collect()
+    assert(ok.toSeq == Seq(1L))
+    val far = Seq((1L, Seq(2000000000L, 0L))).toDF("vec_id", "ri")
+      .select(CentroidExprs.centroid_nearest_limb(col("ri"), cents))
+    val e = intercept[Exception](far.collect())
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(t => Option(t.getMessage).exists(_.contains("|scaled| <= 1e9"))), e)
+    val e2 = intercept[IllegalArgumentException](
+      CentroidExprs.centroid_nearest_limb(col("ri"), Array(Array(-2000000000L, 0L))))
+    assert(e2.getMessage.contains("centroid coordinate -2000000000"))
+  }
+
   test("NON-NULLABLE input stays codegen'd (generated code must not reference undeclared isNull)") {
     // regression: nullSafeCodeGen only DECLARES ev.isNull for nullable
     // expressions; the kernels' null-result guard referenced it

@@ -83,4 +83,14 @@ class RobustStatsSpec extends AnyFunSuite {
     assert(got("a")._2.contains(3.0))
     assert(got("b") == ((2L, None, 0L))) // all-null group: n kept, stats null
   }
+
+  test("serialize refuses a group past the 2 GB buffer instead of overflowing Int") {
+    // 12 + size * 8 wraps negative in Int arithmetic once size > 268,435,454;
+    // the guard must fire before anything is allocated or written
+    val buf = new RobustStatsAgg.Buf()
+    buf.size = Int.MaxValue / 8 + 1
+    val e = intercept[IllegalArgumentException](RobustStatsAgg(org.apache.spark.sql.catalyst.expressions.Literal(0.0)).serialize(buf))
+    assert(e.getMessage.contains(s"a group of ${Int.MaxValue / 8 + 1} non-null values"))
+    assert(e.getMessage.contains("q26"))
+  }
 }
