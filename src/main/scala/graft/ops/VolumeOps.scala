@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -19,6 +19,13 @@ import graft.volume.Volume
   * fromVoxels write path. */
 object VolumeOps {
 
+  /** Target voxel of the 2×2×1 pooling, `t = fld(v-1, 2) + 1` in x/y:
+    * the group keys `(x, y, z, c)` both downsamplers pool over. */
+  private def pooled: Seq[Column] = Seq(
+    (floor((col("x") - 1) / 2) + 1).cast(IntegerType).as("x"),
+    (floor((col("y") - 1) / 2) + 1).cast(IntegerType).as("y"),
+    col("z"), col("c"))
+
   /** Mean-pool 2×2×1 blocks (image layers). Integer volumes round the mean
     * back to an integral value; float volumes keep the fractional mean
     * (rounding would destroy e.g. [0,1) affinity data). */
@@ -26,10 +33,7 @@ object VolumeOps {
     val isFloat = vol.meta.dataType == Meta.TFloat32 || vol.meta.dataType == Meta.TFloat64
     val mean = avg(col("value"))
     vol.toVoxels(box)
-      .groupBy(
-        (floor((col("x") - 1) / 2) + 1).cast(IntegerType).as("x"),
-        (floor((col("y") - 1) / 2) + 1).cast(IntegerType).as("y"),
-        col("z"), col("c"))
+      .groupBy(pooled: _*)
       .agg((if (isFloat) mean else round(mean).cast(LongType)).as("value"))
   }
 
@@ -37,10 +41,7 @@ object VolumeOps {
     * label wins; ties break to the smallest label (deterministic). */
   def downsampleMode(vol: Volume, box: Box): DataFrame = {
     val counted = vol.toVoxels(box)
-      .groupBy(
-        (floor((col("x") - 1) / 2) + 1).cast(IntegerType).as("x"),
-        (floor((col("y") - 1) / 2) + 1).cast(IntegerType).as("y"),
-        col("z"), col("c"), col("value"))
+      .groupBy(pooled :+ col("value"): _*)
       .agg(count(lit(1)).as("cnt"))
     val w = Window.partitionBy(col("x"), col("y"), col("z"), col("c"))
       .orderBy(col("cnt").desc, col("value").asc)
@@ -77,7 +78,8 @@ object VolumeOps {
     *
     * Works at CHUNK grain with NO shuffle: one task per destination chunk
     * reads just the source chunks it overlaps (blob fetch + decode + range
-    * blit), encodes, and writes. Voxels never become rows — a voxel-grain
+    * blit) and encodes; `Volume.writeChunks` stores it without reading the
+    * destination. Voxels never become rows — a voxel-grain
     * `toVoxels`→`fromVoxels` pass was measured ~20x slower (24-byte rows
     * per source byte through an exchange). Read amplification is bounded
     * by the grid overlap factor (a source chunk is re-read by at most
@@ -90,49 +92,35 @@ object VolumeOps {
     * source-true; chunks wholly outside `box` stay absent. */
   def rechunk(vol: Volume, box: Box, destRoot: String, chunkSize: (Int, Int, Int),
       encoding: Option[String] = None): Long = {
-    import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.functions.{coalesce, col, lit, sum => colSum}
     import graft.core.Grid
     import graft.volume.{ChunkStore, VoxelBuffer}
-    val srcScale = vol.meta.scales(vol.mip - 1)
-    val meta2 = vol.meta.copy(scales = Vector(srcScale.copy(
+    val meta2 = vol.meta.copy(scales = Vector(vol.scaleMeta.copy(
       chunkSize = chunkSize, encoding = encoding.getOrElse(vol.ctx.encoding))))
     val dest = Volume.create(vol.spark, destRoot, meta2, 1, vol.fillMissing)
     val sc = vol.ctx; val dc = dest.ctx
-    val (sconf, dconf) = (sc.hadoopConf(vol.spark), dc.hadoopConf(vol.spark))
+    val sfs = new ChunkStore.TaskFs(sc.root, sc.hadoopConf(vol.spark))
     // a source chunk absent AND wholly outside `box` reads as zeros even
     // from a strict source: a fill_missing reader of the SOURCE would see
     // zeros there too, so they are faithful, not fabricated
     val scOutside = sc.copy(fillMissing = true)
-    val written = dest.chunkTasks(box).as(Encoders.product[(Int, Int, Int)])
-      .mapPartitions({ it =>
-        val sfs = ChunkStore.fs(sc.root, sconf.conf)
-        val dfs = ChunkStore.fs(dc.root, dconf.conf)
-        it.flatMap { case (cx, cy, cz) =>
-          dc.sliceAt(cx, cy, cz, box).map { ds =>
-            val out = VoxelBuffer.zeros(sc.dataType,
-              ds.chunkBox.x.len, ds.chunkBox.y.len, ds.chunkBox.z.len, sc.numChannels,
-              (ds.chunkBox.x.lo, ds.chunkBox.y.lo, ds.chunkBox.z.lo))
-            // Fill the WHOLE destination chunk from source data, not just
-            // its `box` overlap: the new store's metadata claims the full
-            // volume, so every voxel inside a written chunk must be
-            // source-true — a cutout-only blit would persist fabricated
-            // zeros in the uncovered corner of boundary-straddling chunks.
-            // Chunks with no box overlap are never planned, so the only
-            // out-of-box voxels written are this boundary spill.
-            val tgt = ds.chunkBox
-            val src = Grid.idRanges(tgt, sc.chunkSize, sc.voxelOffset)
-            for (sz <- src.loz to src.hiz; sy <- src.loy to src.hiy; sx <- src.lox to src.hix)
-              sc.sliceAt(sx, sy, sz, tgt).foreach { ss =>
-                val reader = if (ss.cutoutBox.intersect(box).isEmpty) scOutside else sc
-                reader.readChunk(sfs, ss).foreach(out.blit(_, ss.cutoutBox))
-              }
-            ChunkStore.write(dfs, dc.root, dc.keyOf(ds), dc.encodeChunk(out))
-            1L
-          }
+    dest.writeChunks(dest.chunkTasks(box), box) { (ds, _, _) =>
+      // Fill the WHOLE destination chunk from source data, not just its
+      // `box` overlap: the new store's metadata claims the full volume, so
+      // every voxel inside a written chunk must be source-true — a
+      // cutout-only blit would persist fabricated zeros in the uncovered
+      // corner of boundary-straddling chunks. Chunks with no box overlap
+      // are never planned, so the only out-of-box voxels written are this
+      // boundary spill.
+      val tgt = ds.chunkBox
+      val out = VoxelBuffer.zeros(sc.dataType, sc.numChannels, tgt)
+      val src = Grid.idRanges(tgt, sc.chunkSize, sc.voxelOffset)
+      for (sz <- src.loz to src.hiz; sy <- src.loy to src.hiy; sx <- src.lox to src.hix)
+        sc.sliceAt(sx, sy, sz, tgt).foreach { ss =>
+          val reader = if (ss.cutoutBox.intersect(box).isEmpty) scOutside else sc
+          reader.readChunk(sfs.get, ss).foreach(out.blit(_, ss.cutoutBox))
         }
-      })(Encoders.scalaLong)
-    written.toDF("n").agg(coalesce(colSum(col("n")), lit(0L))).head.getLong(0)
+      dc.encodeChunk(out)
+    }
   }
 
   /** Build mips `vol.mip+1 .. topMip` over `box`, each level fed by the

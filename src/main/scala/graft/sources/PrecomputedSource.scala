@@ -422,7 +422,9 @@ class PrecomputedWriteBuilder(root: String, mips: Seq[(Int, Meta.ScaleMeta)],
 
 /** Each input row `(mip, cx, cy, cz, blob)` becomes one object under its
   * canonical chunk key in the row's mip level, clamped to that level's
-  * volume box like the reference writer (src/type.jl:165-205). Commit is
+  * volume box like the reference writer (src/type.jl:165-205). A row whose
+  * cell lies outside that volume, or whose blob is null, fails the write
+  * with an IllegalArgumentException naming the mip and cell. Commit is
   * per-object (last-writer-wins), matching the reference's object-store
   * semantics. */
 class PrecomputedBatchWrite(root: String, scales: Map[Int, Meta.ScaleMeta],
@@ -464,6 +466,12 @@ class PrecomputedBatchWrite(root: String, scales: Map[Int, Meta.ScaleMeta],
         val cx = row.getInt(idx("cx")); val cy = row.getInt(idx("cy")); val cz = row.getInt(idx("cz"))
         val chunkBox = Grid.Box(Grid.chunkIval(cx, csx, ox), Grid.chunkIval(cy, csy, oy),
           Grid.chunkIval(cz, csz, oz))
+        // VolumeCtx.sliceAt's emptiness rule: a cell with no voxel in the
+        // volume has no key any reader enumerates
+        if (chunkBox.intersect(scaleB.volumeBox).isEmpty) throw new IllegalArgumentException(
+          s"row (mip $m, cell ($cx, $cy, $cz)) lies outside that scale's volume ${scaleB.volumeBox}")
+        if (row.isNullAt(idx("blob"))) throw new IllegalArgumentException(
+          s"row (mip $m, cell ($cx, $cy, $cz)) has a null blob")
         val clamped = Grid.clampHiTo(chunkBox, scaleB.volumeBox)
         val key = s"${scaleB.key}/${Grid.boxKey(clamped)}"
         ChunkStore.write(fs, rootB, key, row.getBinary(idx("blob")))

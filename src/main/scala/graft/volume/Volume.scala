@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SparkSe
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{Codec, Grid, Meta}
+import graft.core.{Codec, Grid, Meta, Shard}
 import graft.core.Grid.{Box, ChunkSlice, Ival}
 import graft.core.Meta.{ScaleMeta, VolumeMeta, VoxelType}
 import graft.sources.PrecomputedScan
@@ -365,8 +365,13 @@ final case class CutPiece(ox: Int, oy: Int, oz: Int, sx: Int, sy: Int, sz: Int, 
   *  - `cutout` materializes on the driver (API parity with the reference's
   *    `ba[ranges...]`) and is guarded by a size cap — large reads should stay
   *    distributed via `toVoxels`;
-  *  - `fromVoxels` shuffles voxels once, by chunk id (the only shuffle in the
-  *    write path), then assembles and writes each chunk object in the task.
+  *  - every chunk writer (`ingest`, `fromVoxels`, `VolumeOps.rechunk`)
+  *    stores through the one private `writeChunks`. Shuffles per layout:
+  *    on per-chunk layouts `ingest` and `rechunk` are shuffle-free and
+  *    `fromVoxels` shuffles voxels once, by chunk id; on sharded layouts
+  *    `writeChunks` groups chunks by shard (one shuffle), so `ingest`
+  *    shuffles once and `fromVoxels` twice (by chunk, then by shard).
+  *    `rechunk` always writes a precomputed (per-chunk) store.
   */
 final class Volume(
     @transient val spark: SparkSession,
@@ -428,6 +433,65 @@ final class Volume(
     }
   }
 
+  /** The chunk-write loop behind every writer — the reference's per-mode
+    * slice/encode/PUT loop (src/type.jl:137-150; src/modes/sequential.jl:4-17;
+    * src/modes/multithreads.jl:39-64) in one place. `cells` holds rows
+    * `(cx, cy, cz[, payload])` (payload binary; null when the column is
+    * absent). Each cell whose slice within `query` lies in the volume stores
+    * `content(slice, payload, existing)` as its chunk, where `existing` is
+    * the stored blob, fetched only if `content` forces it. Returns the
+    * number of chunks written.
+    *  - per-chunk layouts: one pass, one FileSystem per partition, one PUT
+    *    per chunk; `existing` is [[VolumeCtx.fetchChunk]];
+    *  - sharded layouts: cells group by shard (one shuffle); each shard
+    *    object is read whole, once, `existing` is that cell's bytes in it,
+    *    and the rebuilt shard is written with one PUT. A shard with no
+    *    in-volume cell is neither read nor written. */
+  private[graft] def writeChunks(cells: DataFrame, query: Box)(
+      content: (ChunkSlice, Array[Byte], => Option[Array[Byte]]) => Array[Byte]): Long = {
+    val c = ctx; val conf = c.hadoopConf(spark)
+    val rows = (if (cells.columns.length == 3) cells.withColumn("payload", lit(null).cast(BinaryType))
+      else cells).as(Encoders.product[(Int, Int, Int, Array[Byte])])
+    val written = c.shard match {
+      case None =>
+        rows.mapPartitions { it =>
+          val fs = ChunkStore.fs(c.root, conf.conf)
+          it.flatMap { case (cx, cy, cz, payload) =>
+            c.sliceAt(cx, cy, cz, query).map { s =>
+              ChunkStore.write(fs, c.root, c.keyOf(s), content(s, payload, c.fetchChunk(fs, s)))
+              1L
+            }
+          }
+        }(Encoders.scalaLong)
+      case Some(p) =>
+        rows.groupByKey { case (cx, cy, cz, _) => c.shardCoords(cx, cy, cz) }(
+          Encoders.product[(Int, Int, Int)])
+          .mapGroups({ (_: (Int, Int, Int), group: Iterator[(Int, Int, Int, Array[Byte])]) =>
+            val inVolume = group.flatMap { case (cx, cy, cz, payload) =>
+              c.sliceAt(cx, cy, cz, query).map((_, payload))
+            }.buffered
+            if (!inVolume.hasNext) 0L
+            else {
+              val fs = ChunkStore.fs(c.root, conf.conf)
+              val key = c.shardKeyOf(inVolume.head._1)
+              var inner = ChunkStore.readOpt(fs, c.root, key).map(Shard.parseAll(p, _))
+                .getOrElse(Map.empty)
+              var n = 0L
+              inVolume.foreach { case (s, payload) =>
+                val (wx, wy, wz) = c.innerCoords(s)
+                val cell = p.linear(wx, wy, wz)
+                inner += (cell -> content(s, payload, inner.get(cell)))
+                n += 1
+              }
+              ChunkStore.write(fs, c.root, key, Shard.build(p, inner))
+              Shard.invalidate(c.root, key)
+              n
+            }
+          })(Encoders.scalaLong)
+    }
+    written.toDF("n").agg(coalesce(sum(col("n")), lit(0L))).head().getLong(0)
+  }
+
   /** The present chunks of `query`, each clipped to its cutout box and
     * anchored at global coords; absent chunks (fillMissing) yield no piece. */
   private def cutPieces(query: Box): Dataset[CutPiece] =
@@ -447,8 +511,7 @@ final class Volume(
     val bytesNeeded = query.numVoxels * meta.numChannels * meta.dataType.byteSize
     require(bytesNeeded <= maxBytes,
       s"cutout of $bytesNeeded bytes exceeds cap $maxBytes; use toVoxels for distributed processing")
-    val out = VoxelBuffer.zeros(meta.dataType, query.x.len, query.y.len, query.z.len,
-      meta.numChannels, (query.x.lo, query.y.lo, query.z.lo))
+    val out = VoxelBuffer.zeros(meta.dataType, meta.numChannels, query)
     cutPieces(query).collect().foreach { p =>
       val piece = new VoxelBuffer(meta.dataType, p.sx, p.sy, p.sz, meta.numChannels,
         (p.ox, p.oy, p.oz), p.bytes)
@@ -1315,9 +1378,11 @@ final class Volume(
   /** Driver-buffer ingest: the reference's `ba[ranges...] = buf`
     * (reference: src/type.jl:137-150). Enforces chunk-aligned write starts
     * like the reference (src/modes/multithreads.jl:45-47: alignment uses the
-    * raw voxel offset), clamps at the volume boundary, slices/encodes/puts
-    * one object per chunk. The buffer ships to executors via broadcast —
-    * fine for cutout-sized writes; use `fromVoxels` for bulk loads.
+    * raw voxel offset), clamps at the volume boundary, and stores through
+    * [[writeChunks]]: a chunk the buffer covers whole is its slice, a
+    * partly covered one is merged into the stored chunk (only those are
+    * read). The buffer ships to executors via broadcast — fine for
+    * cutout-sized writes; use `fromVoxels` for bulk loads.
     *
     * Concurrency contract (this and `fromVoxels`): writes are
     * last-PUT-wins per stored OBJECT, with no cross-job coordination —
@@ -1340,16 +1405,13 @@ final class Volume(
       "write start must align with the chunk grid (reference: src/modes/multithreads.jl:45-47)")
     require(buf.nc == meta.numChannels, "channel count mismatch")
     require(buf.dataType == meta.dataType, "dtype mismatch")
-    val c = ctx; val conf = c.hadoopConf(spark)
+    val c = ctx
     val bufBc = spark.sparkContext.broadcast(buf)
-    /** Encoded bytes for one chunk of the write, read-modify-merged when the
-      * write box only partially covers it (so existing data survives). The
-      * stored blob must always cover the chunk box — that's the shape the
-      * read path reconstructs from the grid. `existing` supplies the stored
-      * blob (None = absent) — sharded callers serve it from the shard
-      * object they already read, never a second ranged GET. */
-    def encodeCovered(b: VoxelBuffer, s: Grid.ChunkSlice,
-        existing: => Option[Array[Byte]]): Array[Byte] = {
+    // the stored blob always covers the chunk box — the shape the read path
+    // reconstructs from the grid — so a partly covered chunk is merged into
+    // the stored one (absent = zeros)
+    writeChunks(chunkTasks(q), q) { (s, _, existing) =>
+      val b = bufBc.value
       val cb = s.chunkBox
       val covered = cb.intersect(b.box)
       val chunkBuf =
@@ -1357,76 +1419,26 @@ final class Volume(
         else {
           val merged = existing match {
             case Some(blob) => c.decodeChunk(s, blob)
-            case None => VoxelBuffer.zeros(c.dataType, cb.x.len, cb.y.len, cb.z.len,
-              c.numChannels, (cb.x.lo, cb.y.lo, cb.z.lo))
+            case None => VoxelBuffer.zeros(c.dataType, c.numChannels, cb)
           }
           merged.blit(b, covered)
           merged
         }
       c.encodeChunk(chunkBuf)
     }
-    val taskEnc = Encoders.product[(Int, Int, Int)]
-    val written = c.shard match {
-      case None =>
-        chunkTasks(q).as(taskEnc).mapPartitions({ it =>
-          val fs = ChunkStore.fs(c.root, conf.conf)
-          val b = bufBc.value
-          it.flatMap { case (cx, cy, cz) =>
-            c.sliceAt(cx, cy, cz, q).map { s =>
-              ChunkStore.write(fs, c.root, c.keyOf(s),
-                encodeCovered(b, s, c.fetchChunk(fs, s)))
-              1
-            }
-          }
-        })(Encoders.scalaInt)
-      case Some(p) =>
-        // sharded: ALL inner chunks of one shard object must be written
-        // together (per-cell writes would clobber each other), so tasks
-        // group by shard key — one assembled PUT per shard, inner cells
-        // untouched by the write preserved from the existing object
-        chunkTasks(q).as(taskEnc)
-          .groupByKey { case (cx, cy, cz) => c.shardCoords(cx, cy, cz) }(taskEnc)
-          .mapGroups({ (_: (Int, Int, Int), cells: Iterator[(Int, Int, Int)]) =>
-            val fs = ChunkStore.fs(c.root, conf.conf)
-            val b = bufBc.value
-            var shardKey: String = null
-            var inner = Map.empty[Int, Array[Byte]]
-            var loadedExisting = false
-            var n = 0
-            cells.foreach { case (cx, cy, cz) =>
-              c.sliceAt(cx, cy, cz, q).foreach { s =>
-                if (!loadedExisting) {
-                  shardKey = c.shardKeyOf(s)
-                  inner = ChunkStore.readOpt(fs, c.root, shardKey)
-                    .map(graft.core.Shard.parseAll(p, _)).getOrElse(Map.empty)
-                  loadedExisting = true
-                }
-                val (wx, wy, wz) = c.innerCoords(s)
-                val cell = p.linear(wx, wy, wz)
-                inner += (cell -> encodeCovered(b, s, inner.get(cell)))
-                n += 1
-              }
-            }
-            if (shardKey != null) {
-              ChunkStore.write(fs, c.root, shardKey, graft.core.Shard.build(p, inner))
-              graft.core.Shard.invalidate(c.root, shardKey)
-            }
-            n
-          })(Encoders.scalaInt)
-    }
-    written.toDF("n").agg(coalesce(sum(col("n")), lit(0L))).head // force the job
     bufBc.destroy()
   }
 
   /** Bulk distributed ingest from a voxel DataFrame `(x, y, z[, c], value)`.
-    * One shuffle (by chunk id), then per-chunk assembly + encode + put.
-    * Whole chunks are written: voxels absent from the input within a touched
-    * chunk become zero. Values outside the volume box are dropped (boundary
+    * One shuffle (by chunk id) assembles and encodes each chunk, which
+    * [[writeChunks]] stores without reading it (sharded layouts: a second
+    * shuffle, by shard). Whole chunks are written: voxels absent from the
+    * input within a touched chunk become zero. Values outside the volume box are dropped (boundary
     * clamp). Same single-writer-per-object contract as [[ingest]]: for
     * sharded layouts concurrent jobs must target disjoint SHARDS, not just
     * disjoint chunks. */
   def fromVoxels(df: DataFrame): Long = {
-    val c = ctx; val conf = c.hadoopConf(spark)
+    val c = ctx
     val (csx, csy, csz) = ctx.chunkSize
     val ox = Grid.gridOffset(c.voxelOffset._1, csx)
     val oy = Grid.gridOffset(c.voxelOffset._2, csy)
@@ -1449,79 +1461,27 @@ final class Volume(
         col("c").cast(IntegerType), vLong.as("vl"), vDbl.as("vd"))
     implicit val enc = Encoders.product[(Int, Int, Int, Int, Int, Int, Int, Long, Double)]
     type Vox = (Int, Int, Int, Int, Int, Int, Int, Long, Double)
-    /** Assemble one whole chunk from its voxels (absent voxels = zero). */
-    def assemble(s: Grid.ChunkSlice, voxels: Iterator[Vox]): VoxelBuffer = {
-      val b = s.chunkBox
-      val chunkBuf = VoxelBuffer.zeros(c.dataType, b.x.len, b.y.len, b.z.len,
-        c.numChannels, (b.x.lo, b.y.lo, b.z.lo))
-      voxels.foreach { case (_, _, _, x, y, z, ch, vl, vd) =>
-        if (b.x.contains(x) && b.y.contains(y) && b.z.contains(z)) {
-          if (isFloat) chunkBuf.setDouble(x - b.x.lo, y - b.y.lo, z - b.z.lo, ch, vd)
-          else chunkBuf.setLong(x - b.x.lo, y - b.y.lo, z - b.z.lo, ch, vl)
+    // one chunk buffer per task: each chunk group streams its voxels into
+    // one whole encoded chunk (absent voxels = zero), which reaches
+    // writeChunks as the payload (sharded layouts then group the blobs by
+    // shard — never a shard of voxels)
+    val blobs = prepared.as[Vox]
+      .groupByKey { case (cx, cy, cz, _, _, _, _, _, _) => (cx, cy, cz) }(Encoders.product[(Int, Int, Int)])
+      .flatMapGroups((key: (Int, Int, Int), voxels: Iterator[Vox]) => {
+        val (cx, cy, cz) = key
+        c.sliceAt(cx, cy, cz, c.volumeBox).map { s =>
+          val b = s.chunkBox
+          val chunkBuf = VoxelBuffer.zeros(c.dataType, c.numChannels, b)
+          voxels.foreach { case (_, _, _, x, y, z, ch, vl, vd) =>
+            if (b.x.contains(x) && b.y.contains(y) && b.z.contains(z)) {
+              if (isFloat) chunkBuf.setDouble(x - b.x.lo, y - b.y.lo, z - b.z.lo, ch, vd)
+              else chunkBuf.setLong(x - b.x.lo, y - b.y.lo, z - b.z.lo, ch, vl)
+            }
+          }
+          (cx, cy, cz, c.encodeChunk(chunkBuf))
         }
-      }
-      chunkBuf
-    }
-    val ds = prepared.as[Vox]
-    val results = c.shard match {
-      case None =>
-        ds.groupByKey { case (cx, cy, cz, _, _, _, _, _, _) => (cx, cy, cz) }(Encoders.product[(Int, Int, Int)])
-          .mapGroups((key: (Int, Int, Int), voxels: Iterator[Vox]) => {
-            val (cx, cy, cz) = key
-            val fs = ChunkStore.fs(c.root, conf.conf)
-            // whole-box query so sliceAt clamps to the volume only
-            c.sliceAt(cx, cy, cz, c.volumeBox) match {
-              case Some(s) =>
-                ChunkStore.write(fs, c.root, c.keyOf(s), c.encodeChunk(assemble(s, voxels)))
-                1L
-              case None => 0L
-            }
-          })(Encoders.scalaLong)
-      case Some(p) =>
-        // sharded: the storage unit is the SHARD object (a chunk-grain
-        // write would have concurrent tasks clobbering one object), but
-        // buffering a whole shard's VOXELS in one task would not survive
-        // production shard sizes. Two stages instead: (1) chunk-grain
-        // groups stream their voxels into encoded inner-chunk blobs —
-        // bounded by ONE chunk buffer per task, same memory contract as
-        // the per-chunk path; (2) shard-grain groups compose the
-        // (compressed, shard-object-sized) blobs and rewrite each shard
-        // once, cells outside the input preserved from the existing
-        // object.
-        implicit val blobEnc = Encoders.product[(Int, Int, Int, Int, Array[Byte])]
-        val encoded = ds
-          .groupByKey { case (cx, cy, cz, _, _, _, _, _, _) => (cx, cy, cz) }(
-            Encoders.product[(Int, Int, Int)])
-          .flatMapGroups((key: (Int, Int, Int), voxels: Iterator[Vox]) => {
-            val (cx, cy, cz) = key
-            c.sliceAt(cx, cy, cz, c.volumeBox).map { s =>
-              val (sx, sy, sz) = c.shardCoords(cx, cy, cz)
-              val (wx, wy, wz) = c.innerCoords(s)
-              (sx, sy, sz, p.linear(wx, wy, wz), c.encodeChunk(assemble(s, voxels)))
-            }.iterator
-          })
-        encoded
-          .groupByKey { case (sx, sy, sz, _, _) => (sx, sy, sz) }(
-            Encoders.product[(Int, Int, Int)])
-          .mapGroups((sk: (Int, Int, Int), blobs: Iterator[(Int, Int, Int, Int, Array[Byte])]) => {
-            val fs = ChunkStore.fs(c.root, conf.conf)
-            val (sx, sy, sz) = sk
-            val shardKey = c.shardKeyAt(sx, sy, sz)
-            var inner = ChunkStore.readOpt(fs, c.root, shardKey)
-              .map(graft.core.Shard.parseAll(p, _)).getOrElse(Map.empty)
-            var n = 0L
-            blobs.foreach { case (_, _, _, cell, bytes) =>
-              inner += (cell -> bytes); n += 1
-            }
-            ChunkStore.write(fs, c.root, shardKey, graft.core.Shard.build(p, inner))
-            graft.core.Shard.invalidate(c.root, shardKey)
-            n
-          })(Encoders.scalaLong)
-    }
-    // empty-safe sum (reduce throws on an empty Dataset — e.g. every voxel
-    // filtered out by the volume-box bounds)
-    val total = results.toDF("n").agg(coalesce(sum(col("n")), lit(0L))).head.getLong(0)
-    total
+      })(Encoders.product[(Int, Int, Int, Array[Byte])])
+    writeChunks(blobs.toDF(), c.volumeBox)((_, blob, _) => blob)
   }
 
   /** Grid coordinates of chunks PRESENT in the store within `query` — the

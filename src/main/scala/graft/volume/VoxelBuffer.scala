@@ -106,8 +106,7 @@ final class VoxelBuffer(
 
   /** Extract `gbox` (global coords) as a new buffer anchored at `gbox`'s lo. */
   def slice(gbox: Box): VoxelBuffer = {
-    val out = VoxelBuffer.zeros(dataType, gbox.x.len, gbox.y.len, gbox.z.len, nc,
-      (gbox.x.lo, gbox.y.lo, gbox.z.lo))
+    val out = VoxelBuffer.zeros(dataType, nc, gbox)
     out.blit(this, gbox)
     out
   }
@@ -128,6 +127,10 @@ object VoxelBuffer {
       s"buffer of $bytes bytes exceeds JVM array limits; use the distributed voxel view")
     new VoxelBuffer(t, sx, sy, sz, nc, origin, new Array[Byte](bytes.toInt))
   }
+
+  /** A zero buffer covering `box` (global coords), anchored at its lo. */
+  def zeros(t: VoxelType, nc: Int, box: Box): VoxelBuffer =
+    zeros(t, box.x.len, box.y.len, box.z.len, nc, (box.x.lo, box.y.lo, box.z.lo))
 
   /** Deterministic pseudo-random fill (for tests/benchmarks; value derived
     * from coordinates so any sub-box is independently reproducible). */

@@ -145,6 +145,27 @@ class PrecomputedSourceSpec extends AnyFunSuite {
     assert(dst.cutout(buf.box) == buf)
   }
 
+  test("DSv2 write rejects rows outside their mip's volume and null blobs") {
+    val src = newVolume()
+    val dstRoot = SparkSuite.tempDir("graft-dsv2-reject")
+    Volume.create(spark, dstRoot, src.meta)
+    val one = spark.read.format("precomputed").load(src.root)
+      .filter(col("cx") === 1 && col("cy") === 1 && col("cz") === 1)
+    def rejects(rows: org.apache.spark.sql.DataFrame, says: String): Unit = {
+      val e = intercept[Exception](rows.write.format("precomputed").mode("append").save(dstRoot))
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists(t => t.isInstanceOf[IllegalArgumentException] &&
+        t.getMessage.contains("mip 1") && t.getMessage.contains(says)),
+        chain.map(_.toString).mkString(" <- "))
+    }
+    // x cells of the 510-wide volume are 1..6: 7 lies past it, 0 and -2 before it
+    for (cx <- Seq(7, 0, -2))
+      rejects(one.withColumn("cx", lit(cx)), s"cell ($cx, 1, 1)) lies outside")
+    rejects(one.withColumn("blob", lit(null).cast("binary")), "cell (1, 1, 1)) has a null blob")
+    // no object landed under a degenerate or negative key
+    assert(Option(new java.io.File(dstRoot, "6_6_30").listFiles()).forall(_.isEmpty))
+  }
+
   test(".gz-suffixed stores read fully; absent cells cost ONE probe once resolved") {
     val vol = newVolume()
     val dir = new java.io.File(vol.root, "6_6_30")
